@@ -4,6 +4,14 @@
 the action). Input validation mirrors the reference's regex guards (F3,
 data_provider.py:43-47, pipeline_models.py:35-41).
 
+The pipeline-catalog reads (describe, list, downstream, fetch body) all read
+`pipeline_defs_full`, which catalog.py serves as a driver-resident
+LocalRelation: one row per pipeline (1,000 at sf0.1), collected once on the
+first read after each registration and rebuilt after every re-registration.
+Catalyst folds their filters and projections on the driver, so a warm call
+launches no Spark job. run_single_use mints its sequence number from the
+engine's own submission count, also without a job.
+
 Auth (Okta JWT, auth/auth.py) is deliberately a no-op shim here — outside
 the analytics engine's scope (SURVEY.md section 2.10 note).
 """
@@ -66,7 +74,7 @@ def describe_pipeline(spark: SparkSession, sf_dir: str, pipeline_uuid: str) -> D
 def fetch_pipeline_body(spark: SparkSession, sf_dir: str, pipeline_uuid: str) -> DataFrame:
     """GET /pipeline_config/fetch_pipeline_body — S2+P2."""
     _check(_UUID_RE, pipeline_uuid, "pipeline_uuid")
-    defs = catalog.table(spark, sf_dir, "pipeline_defs")
+    defs = catalog.table(spark, sf_dir, "pipeline_defs_full")
     return defs.filter(F.col("pipeline_uuid") == pipeline_uuid).select(
         "pipeline_uuid", "pipeline_body"
     )
@@ -180,20 +188,17 @@ def run_single_use(
     # submission of the same body is a legitimate re-run and must get its
     # own addressable exec/tracking id (the reference mints a fresh uuid;
     # the deterministic analog derives the sequence from the ledger state,
-    # so replays of the SAME state still reproduce the same id)
-    # Only "this engine has no ledger surface" may default seq to 0; a
-    # transient ledger-READ failure must propagate — silently minting
-    # seq=0 would reuse the first submission's exec_uuid and reintroduce
-    # the repeat-submission collision this sequence exists to prevent.
+    # so replays of the SAME state still reproduce the same id). The engine
+    # counts its submissions as it appends them, so minting reads no
+    # ledger frame and launches no Spark job.
+    # Only "this engine has no ledger" may default seq to 0; any other
+    # failure must propagate — silently minting seq=0 would reuse the
+    # first submission's exec_uuid and reintroduce the repeat-submission
+    # collision this sequence exists to prevent.
     try:
-        ledger = eng.ledger(spark)
-    except (AttributeError, NotImplementedError):
+        seq = eng.submission_count(pipeline_uuid, "singleuse")
+    except NotImplementedError:
         seq = 0
-    else:
-        seq = ledger.filter(
-            (F.col("pipeline_uuid") == pipeline_uuid)
-            & (F.col("source_uuid") == "singleuse")
-        ).count()
     exec_uuid = hashlib.sha256(
         f"singleuse|{pipeline_uuid}|{body}|{seq}".encode()
     ).hexdigest()[:8]

@@ -6,6 +6,16 @@ by date for `events`, bucketed by key for the big joins); here they are plain
 parquet reads — Catalyst still gets pushdown + pruning. Derived domain tables
 are small (O(suppliers) and O(events)) and are cached after first use.
 
+The pipeline catalog view `pipeline_defs_full` (one row per pipeline: 1,000
+rows at sf0.1) is served driver-resident: the first `table(...,
+"pipeline_defs_full")` after a registration collects it once into a JVM
+`LocalRelation` and re-registers the view over that copy. Catalyst's
+`ConvertToLocalRelation` then folds the facade's filters and projections on
+the driver, so describe/list/downstream/fetch-body reads launch no Spark
+job. The copy is rebuilt lazily after every re-registration (sf_dir switch,
+`operators.common.reset_session_state`), so a workload that never reads the
+view never pays for it.
+
 Reference parity: this module replaces kalytical's MongoDbDataProvider
 collection handles (reference data_provider.py:16-27) with DataFrames.
 """
@@ -32,16 +42,25 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # — a shape neither a fresh nor a warm session ever has.
 _CURRENT_SF: dict[tuple[str, int], str] = {}
 _CACHED_DFS: dict[tuple[str, int], list[DataFrame]] = {}
+# sessions whose pipeline_defs_full view is the resident LocalRelation copy
+# of the current registration; register() forgets the entry whenever it
+# re-registers, so the next read rebuilds it from the new sf_dir
+_RESIDENT: dict[tuple[str, int], str] = {}
+
+
+def _session_id(spark: SparkSession) -> tuple[str, int]:
+    # (app id, JVM session identity hash): temp views are SESSION-scoped,
+    # so the key must distinguish sibling sessions, but must not alias a
+    # stopped session whose py4j wrapper address got reused (id() would)
+    return (spark.sparkContext.applicationId, spark._jsparkSession.hashCode())
 
 
 def register(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, cache_domain: bool = True) -> None:
     """Register base parquet tables and derived domain views as temp views."""
-    # (app id, JVM session identity hash): temp views are SESSION-scoped,
-    # so the key must distinguish sibling sessions, but must not alias a
-    # stopped session whose py4j wrapper address got reused (id() would)
-    sid = (spark.sparkContext.applicationId, spark._jsparkSession.hashCode())
+    sid = _session_id(spark)
     if _CURRENT_SF.get(sid) == sf_dir:
         return
+    _RESIDENT.pop(sid, None)
     for df in _CACHED_DFS.pop(sid, []):
         try:
             df.unpersist()
@@ -120,11 +139,22 @@ def _register_defs_full(spark: SparkSession) -> None:
     full.createOrReplaceTempView("pipeline_defs_full")
 
 
+def _make_defs_full_resident(spark: SparkSession, sf_dir: str) -> None:
+    """Replace the pipeline_defs_full join view by a LocalRelation holding
+    its rows. The copy is built JVM-side: a Python-side createDataFrame
+    would give a LogicalRDD, which still launches a job per read."""
+    sid = _session_id(spark)
+    if _RESIDENT.get(sid) == sf_dir:
+        return
+    jss = spark._jsparkSession
+    jdf = jss.table("pipeline_defs_full")
+    local = jss.createDataFrame(jdf.collectAsList(), jdf.schema())
+    local.createOrReplaceTempView("pipeline_defs_full")
+    _RESIDENT[sid] = sf_dir
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     register(spark, sf_dir)
+    if name == "pipeline_defs_full":
+        _make_defs_full_resident(spark, sf_dir)
     return spark.table(name)
-
-
-def tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    register(spark, sf_dir)
-    return tuple(spark.table(n) for n in names)

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import functools
 import time
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,6 +71,11 @@ class BaseEngine:
     def ledger(self, spark: SparkSession) -> DataFrame:
         raise NotImplementedError
 
+    def submission_count(self, pipeline_uuid: str, source_uuid: str) -> int:
+        """Ledger rows submitted so far for (pipeline_uuid, source_uuid),
+        read without a Spark job; an engine with no ledger raises."""
+        raise NotImplementedError
+
     def abort(self, spark: SparkSession, tracking_id: str) -> dict:
         """DELETE /pipeline/dispatcher/abort_pipeline analog
         (facade.py:95-98 -> engine.py:162-169: delete pod by tracking id)."""
@@ -85,6 +91,7 @@ class LocalLedgerEngine(BaseEngine):
 
     def __init__(self):
         self._rows: list[dict] = []
+        self._counts: Counter[tuple[str, str]] = Counter()
 
     def submit(self, spark: SparkSession, row: dict) -> SubmitResult:
         import hashlib
@@ -101,6 +108,7 @@ class LocalLedgerEngine(BaseEngine):
             "status": "submitted",
         }
         self._rows.append(rec)
+        self._counts[rec["pipeline_uuid"], rec["source_uuid"]] += 1
         return SubmitResult(row["pipeline_uuid"], row["exec_uuid"], self.name, tracking)
 
     def ledger(self, spark: SparkSession) -> DataFrame:
@@ -109,6 +117,9 @@ class LocalLedgerEngine(BaseEngine):
             "tracking_id string, retry_count int, source_uuid string, status string"
         )
         return spark.createDataFrame(self._rows, schema=schema)
+
+    def submission_count(self, pipeline_uuid: str, source_uuid: str) -> int:
+        return self._counts[pipeline_uuid, source_uuid]
 
     def abort(self, spark: SparkSession, tracking_id: str) -> dict:
         """Mark the submission aborted (the ledger analog of deleting the

@@ -107,17 +107,20 @@ def evict_other_sf_memos(spark: SparkSession, keep_sf_dir: str) -> None:
     """Drop this session's memoized frames for every OTHER sf_dir (ADVICE
     r11): catalog.register() unpersists the domain caches when a session
     switches sf_dir, but the operator memos (verified pairs, exact top-k
-    baselines, CC labels, ...) are keyed (app, sf_dir) and survived the
+    baselines, CC labels, ...) are keyed (app, sf_dir, ...) and survived the
     switch — in a mixed-sf session (the driver's smoke + gate flow) their
     cached blocks accumulated. Temp views are single-sf_dir per session by
     contract, so a stale-sf memo can never be read again legitimately;
-    unpersist its blocks and forget it."""
+    unpersist its blocks and forget it. A memo key matches when it is a
+    tuple of two or more items with the app id in slot 0 and the sf_dir in
+    slot 1: the 3-tuple keys of ann_verify._SUMMARY_CACHE and
+    kmeans_ivf._FIT_CACHE included."""
     app = app_key(spark)
     for d in SESSION_MEMOS:
         for key in list(d):
             if (
                 isinstance(key, tuple)
-                and len(key) == 2
+                and len(key) >= 2
                 and key[0] == app
                 and isinstance(key[1], str)
                 and key[1] != keep_sf_dir
@@ -164,13 +167,15 @@ def materialize_session_caches(spark: SparkSession) -> None:
             _count(v)
 
 
-# catalog's registration guard and cache list are session memos too (the
-# registration lives HERE because catalog is imported above — a
-# session_memo import from catalog.py would be circular): if the guard
-# survived a reset, domain views would stay registered-but-uncached, a
-# shape neither a fresh nor a warm session ever has.
+# catalog's registration guard, cache list and resident-view marks are
+# session memos too (the registration lives HERE because catalog is
+# imported above — a session_memo import from catalog.py would be
+# circular): if the guard survived a reset, domain views would stay
+# registered-but-uncached, a shape neither a fresh nor a warm session ever
+# has.
 SESSION_MEMOS.append(catalog._CURRENT_SF)
 SESSION_MEMOS.append(catalog._CACHED_DFS)
+SESSION_MEMOS.append(catalog._RESIDENT)
 
 
 _NOW_CACHE: dict[tuple[str, str], object] = session_memo({})

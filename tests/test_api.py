@@ -149,3 +149,54 @@ def test_run_single_use_is_deterministic_and_bypasses_defs(spark):
     assert defs == []
     with pytest.raises(dispatch.EngineNotImplementedError):
         api.run_single_use(spark, {"pipeline_uuid": "p-1", "engine": "K8sPodEngine"})
+
+
+def _jobs_in_group(spark, group: str, action) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_catalog_reads_and_single_use_launch_no_spark_job(spark):
+    """After one warm read, the pipeline-catalog endpoints are answered from
+    the driver-resident view and run_single_use mints its id from the
+    engine's own count: none of them launches a Spark job."""
+    api.describe_pipeline(spark, SF_SMALL, "p-3").collect()
+    eng = dispatch.engine_factory("LocalLedgerEngine")
+    calls = {
+        "describe": lambda: api.describe_pipeline(spark, SF_SMALL, "p-3").collect(),
+        "list": lambda: api.list_pipeline_configs(
+            spark, SF_SMALL, prefix="p-", tags={"tier": "tier-1"}
+        ).collect(),
+        "downstream": lambda: api.downstream_pipelines(spark, SF_SMALL, "p-3").collect(),
+        "body": lambda: api.fetch_pipeline_body(spark, SF_SMALL, "p-3").collect(),
+        "single_use": lambda: api.run_single_use(
+            spark, {"pipeline_uuid": "p-3", "pipeline_body": "{}"}, engine=eng
+        ),
+    }
+    jobs = {name: _jobs_in_group(spark, f"zero-job-{name}", fn) for name, fn in calls.items()}
+    assert jobs == dict.fromkeys(calls, 0)
+
+
+def test_run_single_use_repeat_submissions_get_sequential_ids(spark):
+    """The same body submitted three times on one engine is three runs:
+    seq 0, 1, 2, each exec id the digest of its own sequence number."""
+    import hashlib
+
+    eng = dispatch.engine_factory("LocalLedgerEngine")
+    body = '{"steps": 2}'
+    model = {"pipeline_uuid": "p-5", "pipeline_body": body}
+    got = [api.run_single_use(spark, model, engine=eng).exec_uuid for _ in range(3)]
+    want = [
+        hashlib.sha256(f"singleuse|p-5|{body}|{seq}".encode()).hexdigest()[:8]
+        for seq in range(3)
+    ]
+    assert got == want
+    assert len(set(got)) == 3
+    # a submission from another source does not advance the single-use count
+    eng.submit(spark, {"pipeline_uuid": "p-5", "exec_uuid": "replay000000"})
+    assert eng.submission_count("p-5", "singleuse") == 3
