@@ -114,7 +114,14 @@ def evict_other_sf_memos(spark: SparkSession, keep_sf_dir: str) -> None:
     unpersist its blocks and forget it. A memo key matches when it is a
     tuple of two or more items with the app id in slot 0 and the sf_dir in
     slot 1: the 3-tuple keys of ann_verify._SUMMARY_CACHE and
-    kmeans_ivf._FIT_CACHE included."""
+    kmeans_ivf._FIT_CACHE included.
+
+    Single-session assumption: memos are keyed by app_key (the application
+    id), which sibling sessions of one SparkContext share. An sf switch in
+    one session therefore also evicts the memos a sibling session on
+    another sf_dir is still using. Results stay correct (a memo miss
+    rebuilds), but such siblings churn each other's builds; run one sf_dir
+    per application when that matters."""
     app = app_key(spark)
     for d in SESSION_MEMOS:
         for key in list(d):
@@ -218,35 +225,57 @@ def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     an exact no-op — the repartition never reaches a large input.
 
     The scan-shape contract is ENFORCED, not just documented (ADVICE
-    r11): the cache-substituted logical plan (cached domain views appear
-    as InMemoryRelation leaves, so a view's internal derivation cannot
-    false-positive) is checked for exchange-introducing nodes; a derived
-    frame is returned unchanged rather than risking a job at
-    DataFrame-build time. Plan inspection only — no job runs here."""
+    r11): the node names of the cache-substituted logical plan (and of
+    its subquery plans) are checked for exchange-introducing nodes; a
+    derived frame is returned unchanged rather than risking a job at
+    DataFrame-build time. A MATERIALIZED cache is a leaf: the scan stops
+    at its InMemoryRelation, whose derivation (join, sort, ...) already
+    ran. A cache that is not materialized yet is refused, because `.rdd`
+    would run its derivation. Plan inspection only — no job runs here."""
     n = spark.sparkContext.defaultParallelism
     try:
-        plan = df._jdf.queryExecution().withCachedData().treeString()
+        nodes = _logical_node_names(df._jdf.queryExecution().withCachedData())
     except Exception:
         return df  # cannot prove the frame is scan-shaped: do nothing
-    if any(tok in plan for tok in _SPREAD_UNSAFE_NODES):
+    if any(tok in name for name in nodes for tok in _SPREAD_UNSAFE_NODES):
         return df
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df
 
 
-# logical nodes whose physical plan computes upstream stages when `.rdd`
-# is materialized (or that a scan-shaped frame can never contain)
+def _logical_node_names(plan) -> list[str]:
+    """Names of the nodes of a JVM logical plan, its subquery plans
+    included. An InMemoryRelation is not descended into (its innerChildren
+    are the cached PHYSICAL plan): it is reported only when its blocks are
+    not all loaded, as "UnloadedInMemoryRelation"."""
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "InMemoryRelation":
+            if not node.cacheBuilder().isCachedColumnBuffersLoaded():
+                names.append("UnloadedInMemoryRelation")
+            continue
+        names.append(name)
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return names
+
+
+# logical node-name tokens whose physical plan computes upstream stages
+# when `.rdd` is materialized (or that a scan-shaped frame can never contain)
 _SPREAD_UNSAFE_NODES = (
-    "Aggregate [",
-    "Join ",
-    "Window [",
-    "Sort [",
+    "Aggregate",
+    "Join",
+    "Window",
+    "Sort",
     "Repartition",
     "GlobalLimit",
     "Deduplicate",
     "MapInPandas",
     "FlatMapGroupsInPandas",
+    "UnloadedInMemoryRelation",
 )
 
 

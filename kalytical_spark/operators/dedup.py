@@ -202,7 +202,7 @@ def _minhash_slice_cols() -> list:
     uses for its permutation family). One md5 + 16 integer multiply-adds
     replaces r9's 4 md5 evaluations per shingle, and the min-aggregates
     fold BIGINTs instead of hex strings (hash- instead of
-    sort-aggregable — PLANS.md r10 re-pin; same-day A/B at docs:k30:
+    sort-aggregable — r10 plan re-pin; same-day A/B at docs:k30:
     17.0 -> 5.4 s warm median). h1 + 15*h2 < 2^36, so the arithmetic
     never overflows a BIGINT and the mod never sees a negative. DuckDB
     derives identical values from the same hex slices

@@ -343,55 +343,3 @@ QUERIES: dict[str, tuple] = {
     "events_psi_drift": (events_psi_drift, ORACLE_PSI),
     "events_conformal_interval": (events_conformal_interval, ORACLE_CONFORMAL),
 }
-
-
-def conformal_fit_params(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FROZEN split-conformal model per event type — exactly the fit
-    and calibration quantile events_conformal_interval computes, exported
-    as one row per type for the streaming monitor to ship
-    (streaming/statev2.ConformalMonitorProcessor): (d0, k, sx, sy, a_num,
-    den, q_r). The monitor replays the operator's integer residual test
-    R = |k·den·y − k·a_num·x − sy·den + a_num·sx| <= q_r per closed day,
-    so stream and batch can only agree or fail loudly — there is no
-    second implementation of the interval arithmetic."""
-    dense = _daily_grid(spark, sf_dir).withColumn(
-        "x", F.datediff(F.col("day"), F.col("d0")).cast("bigint")
-    )
-    calib = dense.filter(F.col("x") % 2 == 0)
-    fit = calib.groupBy("event_type").agg(
-        F.count("*").alias("k"),
-        F.sum("x").alias("sx"),
-        F.sum("c").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("c")).alias("sxy"),
-    ).select(
-        "event_type",
-        "k",
-        "sx",
-        "sy",
-        F.expr("k * sxy - sx * sy").alias("a_num"),
-        F.expr("k * sxx - sx * sx").alias("den"),
-    )
-    cal_r = calib.join(F.broadcast(fit), "event_type").select(
-        "event_type",
-        "x",
-        F.expr("abs(k * den * c - k * a_num * x - sy * den + a_num * sx)").alias(
-            "abs_r"
-        ),
-    )
-    rank_w = W.partitionBy("event_type").orderBy("abs_r", "x")
-    q = (
-        cal_r.withColumn("rn", F.row_number().over(rank_w))
-        .withColumn("n_cal", F.count("*").over(W.partitionBy("event_type")))
-        .withColumn(
-            "k_conf",
-            F.expr(
-                f"least((9 * (n_cal + 1) + {CONF_ALPHA_DEN - 1}) div {CONF_ALPHA_DEN},"
-                " n_cal)"
-            ),
-        )
-        .filter(F.col("rn") == F.col("k_conf"))
-        .select("event_type", F.col("abs_r").alias("q_r"))
-    )
-    d0 = dense.groupBy("event_type").agg(F.min("day").alias("d0_day"))
-    return fit.join(q, "event_type").join(d0, "event_type")

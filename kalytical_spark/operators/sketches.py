@@ -333,8 +333,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # previously re-ran the lineitem group/expand/support mine per invocation
 # (guide §2.4: the repeated subtree is a removable pass; same pattern as
 # dedup.shingle_table). In production the co-purchase graph is a stored
-# artifact refreshed on its own cadence; bench.py prepays the build as an
-# explicit memo:copurchase_edges line so query lines stay comparable.
+# artifact refreshed on its own cadence.
 _COPURCHASE_CACHE: dict[tuple[str, str], DataFrame] = session_memo({})
 
 

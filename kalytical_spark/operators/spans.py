@@ -57,8 +57,7 @@ _MIN_PLANT_TOKS = 4  # both halves non-degenerate
 # _SETSIM_CACHE pattern, r9): all three family queries consume it, and
 # uncached each re-paid the gram explode + 40M-at-k100 md5 pass — the
 # dominant leg of each. In production this is the stored artifact of a
-# span-dedup ingest; bench.py prepays it as its own memo:span_positions
-# line so per-query times stay comparable.
+# span-dedup ingest, so the memo mirrors the deployment shape.
 _POS_CACHE: dict[tuple[str, str], DataFrame] = session_memo({})
 
 

@@ -1413,9 +1413,8 @@ QUERIES: dict[str, tuple] = {
 # retrospective scan (statistic uses the whole series), which cannot
 # stream; the monitor form fixes the reference from the series' first
 # week and folds each new day through S+ = max(0, S+ + dev - slack) /
-# S- = max(0, S- - dev - slack), which IS streamable and has a
-# transformWithState twin (streaming/statev2.CusumMonitorProcessor,
-# proven e2e == this operator).
+# S- = max(0, S- - dev - slack), which IS streamable: the state per event
+# type is the reference plus the two running sums.
 
 CUSUM_REF_DAYS = 7  # reference window: the series' first week
 CUSUM_SLACK_MILLI = 50  # k (allowance) = 5% of the reference mean

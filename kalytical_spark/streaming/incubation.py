@@ -16,6 +16,7 @@ The state value holds the accumulated trigger map as parallel arrays
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 from typing import Any
 
@@ -54,7 +55,7 @@ def _update_group(
     """applyInPandasWithState update function: fold this micro-batch's
     deliveries for one downstream pipeline through the shared transition.
 
-    ttl_ms is bound by the caller ONLY when the query runs with
+    ttl_ms is bound by fires_stream ONLY when the query runs with
     ProcessingTimeTimeout (the resident control loop); bounded/NoTimeout
     runs leave it None so no timeout is ever armed. Config errors surface
     at query construction, never silently here (a swallowed failure would
@@ -137,6 +138,36 @@ def delivery_stream(
     )
 
 
+def fires_stream(
+    spark: SparkSession,
+    events_stream: DataFrame,
+    sf_dir: str,
+    ttl_ms: int | None = None,
+) -> DataFrame:
+    """The control loop's stateful operator, built in one place: lifecycle
+    events -> deliveries -> the keyed trigger fold, one output row per fire
+    (OUTPUT_SCHEMA). Every streaming consumer (memory sink, dispatch ledger,
+    checkpointed resume) starts from this frame.
+
+    ttl_ms=None runs with NoTimeout (bounded availableNow drains: with a
+    processing-time timeout armed they keep scheduling state-cleanup
+    batches and never finish). A value arms ProcessingTimeTimeout and the
+    per-group age-out (ST5) with that duration."""
+    deliveries = delivery_stream(spark, events_stream, sf_dir)
+    if ttl_ms is None:
+        update_fn, timeout = _update_group, GroupStateTimeout.NoTimeout
+    else:
+        update_fn = functools.partial(_update_group, ttl_ms=ttl_ms)
+        timeout = GroupStateTimeout.ProcessingTimeTimeout
+    return deliveries.groupBy("pipeline_uuid").applyInPandasWithState(
+        update_fn,
+        outputStructType=OUTPUT_SCHEMA,
+        stateStructType=STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
+
+
 def start_incubation_query(
     spark: SparkSession,
     events_stream: DataFrame,
@@ -148,34 +179,18 @@ def start_incubation_query(
     swaps the source for Kafka/Kinesis and the sink for a checkpointed
     foreachBatch appending to the dispatch ledger.
 
-    bounded=True uses trigger(availableNow) with NoTimeout: drain everything
-    available and terminate — the test/replay mode (with processing-time
-    timeouts armed, the availableNow run keeps scheduling state-cleanup
-    batches and never finishes; processAllAvailable likewise never idles).
+    bounded=True drains everything available with trigger(availableNow)
+    and NoTimeout, then terminates — the test/replay mode.
     bounded=False is the resident control loop: processing-time trigger with
     the age-out TTL armed."""
-    deliveries = delivery_stream(spark, events_stream, sf_dir)
-    if bounded:
-        update_fn = _update_group
-    else:
-        import functools
-
+    ttl_ms = None
+    if not bounded:
         from ..config import load_config
 
         # resolve the TTL on the driver, at query construction: a broken
         # config fails the start() instead of silently disabling the age-out
-        update_fn = functools.partial(
-            _update_group, ttl_ms=load_config().incubating_job_age_out_s * 1000
-        )
-    fires = deliveries.groupBy("pipeline_uuid").applyInPandasWithState(
-        update_fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout if bounded else GroupStateTimeout.ProcessingTimeTimeout
-        ),
-    )
+        ttl_ms = load_config().incubating_job_age_out_s * 1000
+    fires = fires_stream(spark, events_stream, sf_dir, ttl_ms=ttl_ms)
     writer = fires.writeStream.outputMode("append").format("memory").queryName(query_name)
     if bounded:
         writer = writer.trigger(availableNow=True)

@@ -8,8 +8,8 @@ fire-and-forget K8s pods whose only telemetry is the culler's age check).
 second scan, no extra action): each batch's event count, distinct-ish
 volume proxy, null-rate and value sum ride the existing shuffle. The
 listener receives them in ``progress.observedMetrics`` alongside the
-engine's own state/watermark telemetry — everything tools/stream_bench.py
-records is available live, per batch, in production.
+engine's own state/watermark telemetry — events/sec and state size are
+available live, per batch, in production.
 
 Scale: observed aggregates are map-side-combinable and constant-width per
 batch; the listener runs driver-side on the already-serialized progress

@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .incubation import fires_stream
+
 
 def dispatch_ledger_sink(ledger_dir: str):
     """Build a foreachBatch function appending fire decisions to a
@@ -58,18 +60,7 @@ def start_dispatch_query(
 ):
     """The full streaming dispatch pipeline: event stream -> incubation
     state machine -> foreachBatch submission ledger (bounded run)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .incubation import OUTPUT_SCHEMA, STATE_SCHEMA, _update_group, delivery_stream
-
-    deliveries = delivery_stream(spark, events_stream, sf_dir)
-    fires = deliveries.groupBy("pipeline_uuid").applyInPandasWithState(
-        _update_group,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    fires = fires_stream(spark, events_stream, sf_dir)
     return (
         fires.writeStream.foreachBatch(dispatch_ledger_sink(ledger_dir))
         .option("checkpointLocation", checkpoint_dir)
@@ -79,9 +70,11 @@ def start_dispatch_query(
 
 
 def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
-    return spark.read.option("basePath", ledger_dir).parquet(
-        os.path.join(ledger_dir, "batch_id=*")
-    )
+    # the directory itself, not a batch_id=* glob: partition discovery
+    # yields the same batch_id column, and a glob makes the file-stream
+    # metadata probe look up a literal ".../batch_id=*" path and log a
+    # FileNotFoundException WARN on every read
+    return spark.read.option("basePath", ledger_dir).parquet(ledger_dir)
 
 
 def cron_origination_stream(

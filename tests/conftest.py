@@ -8,24 +8,6 @@ import pytest
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-# google.protobuf via the container-local shim (tools/protobuf_shim): the
-# transformWithState JVM<->Python state server needs it in BOTH the test
-# driver and the Spark python workers — PYTHONPATH must be extended BEFORE
-# the JVM starts so workers inherit it. No-op where a real protobuf exists.
-_PB_SHIM = os.path.join(_REPO, "tools", "protobuf_shim")
-_PB_BUNDLED = "/usr/lib/google-cloud-sdk/platform/google_appengine/google/protobuf"
-try:
-    from google.protobuf import descriptor  # noqa: F401
-except ImportError:
-    # only wire the shim into worker PYTHONPATH when the bundled runtime
-    # it bridges actually exists — otherwise keep the clean ImportError
-    # gate (the streaming statev2 tests skip with a readable reason)
-    if os.path.isdir(_PB_SHIM) and os.path.isdir(_PB_BUNDLED):
-        sys.path.insert(0, _PB_SHIM)
-        os.environ["PYTHONPATH"] = (
-            _PB_SHIM + os.pathsep + os.environ.get("PYTHONPATH", "")
-        ).rstrip(os.pathsep)
-
 from kalytical_spark.session import get_spark  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"

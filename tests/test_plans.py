@@ -291,6 +291,41 @@ def test_spread_guard_refuses_derived_frames(spark):
     assert spread(spark, joined) is joined
 
 
+def test_spread_over_materialized_cached_join(spark):
+    """A scan-shaped projection over a MATERIALIZED cache spreads even when
+    the cached frame was built by a join: the join ran when the cache was
+    filled, so it is not part of what `.rdd` executes (ADVICE r12: the
+    cached physical plan that InMemoryRelation prints, with its
+    `BroadcastHashJoin [` and `Sort [`, used to refuse the frame). No job
+    runs inside spread()."""
+    from pyspark.sql import functions as F
+
+    from kalytical_spark.operators.common import spread, t
+
+    emb = t(spark, SF_ORACLE, "embeddings")
+    n = spark.sparkContext.defaultParallelism
+    cached = (
+        emb.join(emb.select(F.col("vec_id").alias("v2")), F.col("vec_id") == F.col("v2"))
+        .coalesce(1)
+        .cache()
+    )
+    try:
+        cached.count()
+        proj = cached.select("vec_id", "embedding")
+        assert proj.rdd.getNumPartitions() < n
+        group = "test_spread_over_materialized_cached_join"
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            got = spread(spark, proj)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert got.rdd.getNumPartitions() == n
+    finally:
+        cached.unpersist()
+
+
 def test_sf_switch_evicts_stale_memos(spark):
     """catalog.register() on an sf_dir SWITCH must evict this session's
     operator memos keyed on the old sf_dir (ADVICE r11): temp views are

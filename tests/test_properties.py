@@ -4,7 +4,7 @@ fire-count bounds, batch-split invariance."""
 
 from __future__ import annotations
 
-from hypothesis import example, given, settings
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from kalytical_spark.streaming.transitions import TriggerState, apply_delivery
@@ -232,54 +232,3 @@ def test_ntile_closed_form_matches_spark(spark, n, k):
     ).collect()
     for r in got:
         assert r.closed == r.direct, (n, r.rank)
-
-
-# ---------------------------------------------------------------------------
-# PSI micro-nat helper (streaming/statev2.psi_micro_from_counts): the pure
-# fold the streaming monitor and its e2e test share
-
-
-_psi_counts = st.dictionaries(
-    st.sampled_from(["a", "b", "c", "d"]),
-    st.integers(min_value=0, max_value=10_000),
-    min_size=1,
-    max_size=4,
-)
-
-
-@given(day=_psi_counts, ref=_psi_counts)
-@settings(max_examples=200, deadline=None)
-def test_psi_nonnegative_and_scale_free(day, ref):
-    from kalytical_spark.streaming.statev2 import psi_micro_from_counts
-
-    n_d, psi = psi_micro_from_counts(day, ref)
-    assert n_d == sum(day.get(t, 0) for t in ref)
-    # PSI is a sum of (p-q)ln(p/q) >= 0 terms; per-cell rounding can shave
-    # at most half a micro-nat each way
-    assert psi >= -len(ref)
-
-
-@example(ref={"a": 0, "b": 0, "c": 0, "d": 14}, k=38)
-@given(ref=_psi_counts, k=st.integers(min_value=1, max_value=50))
-@settings(max_examples=100, deadline=None)
-def test_psi_zero_when_mix_matches(ref, k):
-    """A day whose counts are EXACTLY k x the reference mix has near-zero
-    PSI (not exactly zero: Laplace +1 shifts the two distributions by
-    different amounts at different totals, bounded by the smoothing).
-
-    Per-cell smoothing distortion bound: a zero cell contributes at most
-    ln(k+1)/(n_all+T) nats of pure-smoothing PSI (the log-ratio is at
-    most ln(k+1) and |p'-q'| at most 1/(n_all+T)); non-zero cells shrink
-    as 1/c.  The envelope therefore scales with ln of the total ratio k,
-    NOT a constant — the pinned example (zero-heavy reference, k=38)
-    found the old constant-2-nat envelope too tight."""
-    import math
-
-    from kalytical_spark.streaming.statev2 import psi_micro_from_counts
-
-    day = {t: k * c for t, c in ref.items()}
-    _n_d, psi = psi_micro_from_counts(day, ref)
-    n_all = sum(ref.values())
-    per_cell_micro = round(math.log(k + 1) * 1e6 + 1_000_000)  # + slack
-    bound = len(ref) * per_cell_micro // max(1, n_all + len(ref))
-    assert 0 - len(ref) <= psi <= max(bound, 4 * len(ref))

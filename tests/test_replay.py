@@ -83,6 +83,7 @@ class FakeGroupState:
     def __init__(self):
         self._value = None
         self.hasTimedOut = False
+        self.timeout_ms = None
 
     @property
     def exists(self):
@@ -101,7 +102,7 @@ class FakeGroupState:
         self._value = None
 
     def setTimeoutDuration(self, ms):
-        pass
+        self.timeout_ms = ms
 
 
 def _run_update(chunks, key="p-x"):
@@ -138,6 +139,60 @@ def test_streaming_update_equals_batch_fold(spark):
         pd.testing.assert_frame_equal(
             one_shot.reset_index(drop=True), chunked.reset_index(drop=True)
         )
+
+
+def _bound_update(spark, monkeypatch, ttl_ms):
+    """The update function and timeout conf fires_stream hands to
+    applyInPandasWithState (captured, not started)."""
+    from pyspark.sql.group import GroupedData
+
+    seen = {}
+
+    def capture(self, func, outputStructType, stateStructType, outputMode, timeoutConf):
+        seen.update(func=func, timeout=timeoutConf)
+
+    monkeypatch.setattr(GroupedData, "applyInPandasWithState", capture)
+    catalog.register(spark, SF_SMALL)
+    incubation.fires_stream(spark, spark.table("lifecycle_events"), SF_SMALL, ttl_ms=ttl_ms)
+    return seen["func"], seen["timeout"]
+
+
+def test_fires_stream_age_out_ttl(spark, monkeypatch):
+    """ST5 age-out through the fires_stream binding: a partial multi-dep
+    trigger map arms the configured incubating_job_age_out_s TTL, and a
+    timed-out group drops its state without firing. Without ttl_ms no
+    timeout is ever armed."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from kalytical_spark.config import load_config
+
+    ttl_ms = load_config().incubating_job_age_out_s * 1000
+    partial = pd.DataFrame(
+        {
+            "upstream_uuid": ["u1"],
+            "exec_uuid": ["e1"],
+            "event_time": [pd.Timestamp("2024-01-01")],
+            "trigger_operator": ["all"],
+            "n_deps": [2],
+        }
+    )
+
+    update, timeout = _bound_update(spark, monkeypatch, ttl_ms)
+    assert timeout == GroupStateTimeout.ProcessingTimeTimeout
+    state = FakeGroupState()
+    assert list(update(("p-x",), iter([partial]), state)) == []
+    assert state.get == (["u1"], ["e1"])
+    assert state.timeout_ms == ttl_ms
+
+    state.hasTimedOut = True
+    assert list(update(("p-x",), iter([]), state)) == []
+    assert not state.exists
+
+    update, timeout = _bound_update(spark, monkeypatch, None)
+    assert timeout == GroupStateTimeout.NoTimeout
+    state = FakeGroupState()
+    assert list(update(("p-x",), iter([partial]), state)) == []
+    assert state.exists and state.timeout_ms is None
 
 
 @pytest.mark.slow
@@ -189,16 +244,7 @@ def test_streaming_exactly_once_resume(spark):
 
         def run_once():
             stream = spark.readStream.schema(events.schema).parquet(src)
-            deliveries = incubation.delivery_stream(spark, stream, SF_SMALL)
-            from pyspark.sql.streaming.state import GroupStateTimeout
-
-            fires = deliveries.groupBy("pipeline_uuid").applyInPandasWithState(
-                incubation._update_group,
-                outputStructType=incubation.OUTPUT_SCHEMA,
-                stateStructType=incubation.STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+            fires = incubation.fires_stream(spark, stream, SF_SMALL)
             q = (
                 fires.writeStream.outputMode("append")
                 .format("parquet")

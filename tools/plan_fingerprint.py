@@ -1,4 +1,4 @@
-"""Plan-fingerprint regression gate (PLANS.md, promoted to CI): the
+"""Plan-fingerprint regression gate (tests/test_plan_fingerprints.py): the
 operator MULTISET of each headline query's executed physical plan, pinned
 to tests/plan_fingerprints.json. An unintended new Exchange (someone adds a
 repartition(), a join flips broadcast->sort-merge, a codegen expression
@@ -116,8 +116,8 @@ def fingerprint(df_or_build, spark=None) -> dict[str, int]:
     join structure, codegen vs Python fallback) and deterministic size
     estimates. An unintended repartition, a removed broadcast hint, a
     join flip, or an ArrowEval fallback all move this plan; AQE's runtime
-    improvements on top are owned by the bench medians + sweep spill
-    columns instead (BENCH_NOTES.md, committed regression signal).
+    improvements on top are owned by the measured benchmark instead
+    (perfbench/).
 
     Passing a prebuilt DataFrame skips the reset and materialization (only
     safe for memo-free queries, e.g. the injected-repartition teeth test)."""
@@ -274,7 +274,7 @@ def main() -> None:
     # flipped BHJ<->SMJ between cpus=4 and cpus=8 because cached-size
     # estimates move with partition count; every load-bearing join is now
     # explicitly hinted, and re-pins are cross-checked at a second cpu
-    # count before being trusted (BENCH_NOTES.md r8)
+    # count before being trusted (r8)
     spark = get_spark(
         "plan_fingerprint", cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "4"))
     )
