@@ -25,7 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..streaming.transitions import TriggerState, apply_delivery, sources_repr
+from ..streaming.transitions import (
+    TriggerState,
+    apply_delivery,
+    is_simple_delivery,
+    sources_repr,
+)
 from .common import app_key, eager_cache, session_memo, t
 
 _DECISION_SCHEMA = T.StructType(
@@ -89,9 +94,7 @@ def _fires_simple(deliveries: DataFrame) -> DataFrame:
     Python anywhere in this path."""
     from pyspark.sql import Window as W
 
-    simple = deliveries.filter(
-        (F.col("trigger_operator") == "any") | (F.col("n_deps") == 1)
-    )
+    simple = deliveries.filter(is_simple_delivery())
     w = W.partitionBy("pipeline_uuid").orderBy(F.asc("event_time"), F.asc("exec_uuid"))
     return simple.select(
         "pipeline_uuid",
@@ -133,9 +136,7 @@ def replay_decisions_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate to this plan; tools/plan_fingerprint.py r8)."""
     deliveries = _deliveries(spark, sf_dir)
     fires_simple = _fires_simple(deliveries)
-    multi = deliveries.filter(
-        (F.col("trigger_operator") == "all") & (F.col("n_deps") > 1)
-    )
+    multi = deliveries.filter(~is_simple_delivery())
     fires_multi = multi.groupBy("pipeline_uuid").applyInPandas(
         _fold_group, schema=_DECISION_SCHEMA
     )
@@ -160,9 +161,7 @@ def dag_replay_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     key = (app_key(spark), sf_dir)
     if key in _DECISIONS_CACHE:
-        dec = _DECISIONS_CACHE[key].filter(
-            (F.col("trigger_operator") == "any") | (F.col("n_deps") == 1)
-        )
+        dec = _DECISIONS_CACHE[key].filter(is_simple_delivery())
     else:
         dec = _fires_simple(_deliveries(spark, sf_dir))
     return dec.groupBy("pipeline_uuid", "trigger_operator", "n_deps").agg(

@@ -25,6 +25,17 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # local-mode workers inherit it; executorEnv carries it to a cluster.
 _BLAS_PIN = ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS")
 
+# The driver heap the session asks for by default: half the machine's
+# physical memory, at most 24g. A fixed 24g overcommits a 16 GB machine,
+# and a second session beside it can get the JVM killed.
+DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def default_driver_memory() -> str:
+    """spark.driver.memory unless SPARK_GRAFT_DRIVER_MEM sets it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(DRIVER_MEM_CAP_MB, phys_mb // 2)}m"
+
 
 def get_spark(app_name: str = "kalytical_spark", cpus: int | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
@@ -39,7 +50,10 @@ def get_spark(app_name: str = "kalytical_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
+        )
         # long full-suite runs showed rare 20-40s stalls on whichever query a
         # major GC landed on; a smaller heap with a pause goal bounds them.
         # ReservedCodeCacheSize: a 300-query suite compiles thousands of

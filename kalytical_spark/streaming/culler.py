@@ -21,7 +21,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import KalyticalSparkConfig, load_config
 from ..operators.dag import dag_cull_decisions
@@ -44,7 +43,6 @@ def culler_sink(spark: SparkSession, sf_dir: str, ledger_dir: str):
             return
         (
             dag_cull_decisions(spark, sf_dir)
-            .withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .parquet(os.path.join(ledger_dir, f"batch_id={batch_id}"))
         )

@@ -1,7 +1,14 @@
 """Structured Streaming control loop (SURVEY.md section 7 phase 4; reference
 lifecycle E1/E3): the event stream drives the dependency-trigger state
-machine incrementally with applyInPandasWithState keyed by downstream
-pipeline, emitting the same Fire decisions the batch replay produces.
+machine incrementally with one applyInPandasWithState, emitting the same
+Fire decisions the batch replay produces.
+
+Keying: only a multi-dependency 'all' pipeline can hold a trigger map, so
+only its deliveries are grouped (and hold state) under its own
+pipeline_uuid. A delivery that always fires (transitions.is_simple_delivery)
+goes to one of a few shared simple buckets, one per state partition; a
+bucket group projects each delivery to its fire and never writes state.
+The stream is still scanned once, into one Python operator.
 
 Upgrades over the reference, by design (SURVEY.md section 4.3):
 * exactly-once via checkpointing + idempotent append sink (the reference
@@ -26,7 +33,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..streaming.transitions import TriggerState, apply_delivery, sources_repr
+from ..streaming.transitions import (
+    TriggerState,
+    apply_delivery,
+    is_simple_delivery,
+    sources_repr,
+)
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -38,12 +50,18 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
+OUTPUT_COLUMNS = [f.name for f in OUTPUT_SCHEMA.fields]
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("seen_upstreams", T.ArrayType(T.StringType())),
         T.StructField("seen_execs", T.ArrayType(T.StringType())),
     ]
 )
+
+# Group-key prefix of the simple buckets. A pipeline uuid is [a-z0-9-]+
+# (api._UUID_RE), so no pipeline key can start with it.
+SIMPLE_BUCKET_PREFIX = "#simple-"
 
 
 def _update_group(
@@ -52,15 +70,30 @@ def _update_group(
     state: GroupState,
     ttl_ms: int | None = None,
 ) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState update function: fold this micro-batch's
-    deliveries for one downstream pipeline through the shared transition.
+    """applyInPandasWithState update function for one group key.
+
+    A simple bucket (SIMPLE_BUCKET_PREFIX) holds deliveries of many
+    pipelines that always fire: each row becomes its own fire, and the
+    bucket never reads or writes state. Any other key is a multi-dependency
+    pipeline_uuid: fold this micro-batch's deliveries through the shared
+    transition, with the partial trigger map as its state.
 
     ttl_ms is bound by fires_stream ONLY when the query runs with
     ProcessingTimeTimeout (the resident control loop); bounded/NoTimeout
     runs leave it None so no timeout is ever armed. Config errors surface
     at query construction, never silently here (a swallowed failure would
     disable the ST5 age-out and let keyed state grow unbounded)."""
-    (pipeline_uuid,) = key
+    (state_key,) = key
+    if state_key.startswith(SIMPLE_BUCKET_PREFIX):
+        # one fire per delivery: the row's own pipeline and its single
+        # source (sources_repr of ((upstream, exec),))
+        for pdf in pdfs:
+            if len(pdf):
+                yield pdf.assign(
+                    fired_at=pdf["event_time"],
+                    sources=pdf["upstream_uuid"] + "=" + pdf["exec_uuid"],
+                )[OUTPUT_COLUMNS]
+        return
     if state.hasTimedOut:
         # age-out (ST5): drop the partial trigger map
         state.remove()
@@ -79,11 +112,9 @@ def _update_group(
     # arbitrary order — sorting each chunk independently would fold the
     # deliveries out of global event-time order and diverge from the batch
     # replay (verified: interleaved chunks shift fired_at/slot winners)
-    import pandas as _pd
-
     chunks = [pdf for pdf in pdfs if len(pdf)]
     if chunks:
-        merged = _pd.concat(chunks, ignore_index=True).sort_values(
+        merged = pd.concat(chunks, ignore_index=True).sort_values(
             ["event_time", "exec_uuid"], kind="mergesort"
         )
     else:
@@ -98,7 +129,7 @@ def _update_group(
             if fire is not None:
                 rows.append(
                     {
-                        "pipeline_uuid": pipeline_uuid,
+                        "pipeline_uuid": state_key,
                         "fired_at": fire.event_time,
                         "trigger_operator": operator,
                         "n_deps": n_deps,
@@ -114,7 +145,7 @@ def _update_group(
     elif state.exists:
         state.remove()
     if rows:
-        yield pd.DataFrame(rows, columns=[f.name for f in OUTPUT_SCHEMA.fields])
+        yield pd.DataFrame(rows, columns=OUTPUT_COLUMNS)
 
 
 def delivery_stream(
@@ -152,14 +183,26 @@ def fires_stream(
     ttl_ms=None runs with NoTimeout (bounded availableNow drains: with a
     processing-time timeout armed they keep scheduling state-cleanup
     batches and never finish). A value arms ProcessingTimeTimeout and the
-    per-group age-out (ST5) with that duration."""
-    deliveries = delivery_stream(spark, events_stream, sf_dir)
+    per-group age-out (ST5) with that duration; only multi-dependency
+    pipeline keys ever arm it, since the simple buckets hold no state.
+
+    The bucket count is the session's spark.sql.shuffle.partitions at
+    construction. A checkpoint keeps its own partition count, and a
+    different bucket count on resume is harmless: buckets hold no state."""
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    bucket = F.concat(
+        F.lit(SIMPLE_BUCKET_PREFIX),
+        F.pmod(F.hash("pipeline_uuid"), F.lit(n_buckets)).cast("string"),
+    )
+    deliveries = delivery_stream(spark, events_stream, sf_dir).withColumn(
+        "state_key", F.when(is_simple_delivery(), bucket).otherwise(F.col("pipeline_uuid"))
+    )
     if ttl_ms is None:
         update_fn, timeout = _update_group, GroupStateTimeout.NoTimeout
     else:
         update_fn = functools.partial(_update_group, ttl_ms=ttl_ms)
         timeout = GroupStateTimeout.ProcessingTimeTimeout
-    return deliveries.groupBy("pipeline_uuid").applyInPandasWithState(
+    return deliveries.groupBy("state_key").applyInPandasWithState(
         update_fn,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,

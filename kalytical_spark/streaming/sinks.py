@@ -4,9 +4,11 @@ appends — the exactly-once submission ledger that replaces the reference's
 fire-and-forget pod creation (engine.py:96-150).
 
 foreachBatch contract: a micro-batch can be REPLAYED after a failure with
-the same batch_id; the sink must be idempotent. Here each ledger row carries
-its batch_id and replays overwrite that batch's partition (the standard
-transactional-append pattern for non-transactional stores).
+the same batch_id; the sink must be idempotent. Here each batch writes its
+own batch_id=<n> partition directory, and a replay overwrites it (the
+standard transactional-append pattern for non-transactional stores). The
+batch id lives in the directory name only; read_ledger gets it back as an
+int column by partition discovery.
 """
 
 from __future__ import annotations
@@ -25,8 +27,7 @@ def dispatch_ledger_sink(ledger_dir: str):
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .withColumn(
+            batch_df.withColumn(
                 "tracking_id",
                 F.substring(
                     F.sha2(

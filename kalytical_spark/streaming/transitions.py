@@ -9,6 +9,11 @@ two ways:
   micro-batch inside applyInPandasWithState, with the accumulated trigger
   map as the keyed state.
 
+Both modes fold only multi-dependency 'all' pipelines. A delivery that
+always fires (`is_simple_delivery`, the column form of apply_delivery's
+first branch) becomes its fire by projection: a JVM window in the replay,
+a stateless bucket group in the stream.
+
 Semantics reproduced (and their reference citations):
 * operator 'any': fires on EVERY satisfied trigger event (the reference
   fires each time a trigger arrives, dispatcher.py:41-42 — deliberate,
@@ -26,12 +31,20 @@ from a checkpoint after a topology change (deps swapped while n_deps
 stayed equal) can fire with stale sources the batch replay would not
 produce. Redefining a pipeline's dependencies requires resetting its keyed
 state (fresh checkpoint dir or a keyed state purge) — the standard
-structured-streaming contract for stateful logic changes.
+structured-streaming contract for stateful logic changes. The streaming
+operator keys state only for multi-dependency pipelines, so a second case
+follows: a pipeline redefined from multi-dependency 'all' to 'any' or
+single-dependency moves to a shared simple bucket, and the partial trigger
+map left under its own key is never reached again (an orphan until the
+same reset removes it).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -49,6 +62,18 @@ class Fire:
 
     sources: tuple[tuple[str, str], ...]  # sorted (upstream, exec_uuid)
     event_time: object  # timestamp of the delivery that completed the set
+
+
+def is_simple_delivery() -> Column:
+    """Column form of apply_delivery's first branch: True for a delivery
+    that always fires ('any', or a single dependency) and never touches the
+    trigger map. Null-safe: a null operator or n_deps reads as False, the
+    way apply_delivery folds any non-'any' operator with N > 1 deps.
+
+    Spelled with <=> rather than coalesce(... , false): the optimizer then
+    splits the negation into one conjunct per join side (De Morgan), so a
+    `~is_simple_delivery()` filter is pushed below the delivery joins."""
+    return F.col("trigger_operator").eqNullSafe("any") | F.col("n_deps").eqNullSafe(1)
 
 
 def apply_delivery(

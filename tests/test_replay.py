@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from datetime import datetime
 
 import pandas as pd
 import pytest
@@ -139,6 +140,37 @@ def test_streaming_update_equals_batch_fold(spark):
         pd.testing.assert_frame_equal(
             one_shot.reset_index(drop=True), chunked.reset_index(drop=True)
         )
+
+
+def test_simple_bucket_fires_every_delivery_without_state():
+    """A simple bucket group spans several pipelines and Arrow chunks: each
+    delivery fires once with its own pipeline_uuid and single source, and
+    the bucket never writes state, also with the age-out TTL bound."""
+    chunks = [
+        pd.DataFrame(
+            {
+                "pipeline_uuid": pipes,
+                "upstream_uuid": ["u1"] * len(pipes),
+                "exec_uuid": execs,
+                "event_time": [pd.Timestamp("2024-01-01")] * len(pipes),
+                "trigger_operator": ["any", "all"][: len(pipes)],
+                "n_deps": [2, 1][: len(pipes)],
+            }
+        )
+        for pipes, execs in ((["p-a", "p-b"], ["e1", "e2"]), (["p-a"], ["e3"]))
+    ]
+    key = (incubation.SIMPLE_BUCKET_PREFIX + "0",)
+    for ttl_ms in (None, 60_000):
+        state = FakeGroupState()
+        out = pd.concat(
+            incubation._update_group(key, iter(chunks), state, ttl_ms=ttl_ms),
+            ignore_index=True,
+        )
+        assert list(out.columns) == incubation.OUTPUT_COLUMNS
+        assert list(zip(out.pipeline_uuid, out.sources)) == [
+            ("p-a", "u1=e1"), ("p-b", "u1=e2"), ("p-a", "u1=e3")
+        ]
+        assert not state.exists and state.timeout_ms is None
 
 
 def _bound_update(spark, monkeypatch, ttl_ms):
@@ -277,6 +309,63 @@ def test_streaming_exactly_once_resume(spark):
     simple_got = {g for g in got_set if "," not in g[2]}
     assert simple_got == simple_want
     assert len(got_set) == len(want)
+
+
+@pytest.mark.slow
+def test_dispatch_drain_scans_the_source_once(spark):
+    """The dispatch query reads each event once: the summed numInputRows of
+    its progress equals the events written, file by file. A plan that scans
+    the source twice (a self-union) doubles this count."""
+    from kalytical_spark.streaming import sinks
+
+    catalog.register(spark, SF_SMALL)
+    events = spark.table("lifecycle_events")
+    with tempfile.TemporaryDirectory() as tmp:
+        src = os.path.join(tmp, "events")
+        events.coalesce(1).write.parquet(src)
+        events.limit(100).coalesce(1).write.mode("append").parquet(src)
+        stream = (
+            spark.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = sinks.start_dispatch_query(
+            spark, stream, SF_SMALL,
+            ledger_dir=os.path.join(tmp, "ledger"),
+            checkpoint_dir=os.path.join(tmp, "ckpt"),
+        )
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            q.stop()
+        rows = sorted(p["numInputRows"] for p in q.recentProgress if p["numInputRows"])
+    assert rows == sorted([events.count(), 100])
+
+
+def test_ledger_batch_id_is_the_partition_only(spark, tmp_path):
+    """Both batch ledgers keep batch_id in the batch_id=<n> directory only:
+    a part file has no batch_id column of its own (a duplicate makes every
+    read warn COLUMN_ALREADY_EXISTS), and the reader gets an int back."""
+    import pyarrow.parquet as pq
+
+    from kalytical_spark.streaming import culler, sinks
+
+    fires = spark.createDataFrame(
+        [("p-a", datetime(2024, 1, 1), "any", 1, "u1=e1")],
+        incubation.OUTPUT_SCHEMA,
+    )
+    dispatch, cull = tmp_path / "dispatch", tmp_path / "cull"
+    sinks.dispatch_ledger_sink(str(dispatch))(fires, 3)
+    culler.culler_sink(spark, SF_SMALL, str(cull))(spark.range(1), 5)
+    for ledger_dir, batch_id, read in (
+        (dispatch, 3, sinks.read_ledger),
+        (cull, 5, culler.read_culler_ledger),
+    ):
+        part = next((ledger_dir / f"batch_id={batch_id}").glob("*.parquet"))
+        assert "batch_id" not in pq.read_schema(part).names
+        ledger = read(spark, str(ledger_dir))
+        assert dict(ledger.dtypes)["batch_id"] == "int"
+        assert {r.batch_id for r in ledger.collect()} == {batch_id}
 
 
 @pytest.mark.slow
