@@ -4,13 +4,17 @@
 the action). Input validation mirrors the reference's regex guards (F3,
 data_provider.py:43-47, pipeline_models.py:35-41).
 
-The pipeline-catalog reads (describe, list, downstream, fetch body) all read
-`pipeline_defs_full`, which catalog.py serves as a driver-resident
-LocalRelation: one row per pipeline (1,000 at sf0.1), collected once on the
-first read after each registration and rebuilt after every re-registration.
-Catalyst folds their filters and projections on the driver, so a warm call
-launches no Spark job. run_single_use mints its sequence number from the
-engine's own submission count, also without a job.
+The pipeline-catalog reads (describe, list, downstream, fetch body, delete
+guard) all read `pipeline_defs_full`, and incubation_state reads the
+`incubation_state` view. catalog.py serves both as driver-resident
+LocalRelations, collected once on the first read after each registration and
+rebuilt after every re-registration: one row per pipeline (1,000 at sf0.1)
+and one row per incubating run (20,000 at sf0.1). Catalyst folds their
+filters and projections on the driver, so a warm call launches no Spark job.
+run_single_use mints its sequence number from the engine's own submission
+count, also without a job. event_history and running_pipelines still run
+one job each: the sort behind their top-N runs as a job whether or not its
+input is resident.
 
 Auth (Okta JWT, auth/auth.py) is deliberately a no-op shim here — outside
 the analytics engine's scope (SURVEY.md section 2.10 note).
@@ -91,10 +95,15 @@ def downstream_pipelines(spark: SparkSession, sf_dir: str, pipeline_uuid: str) -
 
 def delete_guard(spark: SparkSession, sf_dir: str, pipeline_uuid: str) -> DataFrame:
     """DELETE /pipeline/config/delete precondition — J3 orphan check; a
-    non-empty result blocks the delete (data_provider.py:92-97)."""
+    non-empty result blocks the delete (data_provider.py:92-97). The
+    pipelines whose triggers_on lists this one: a pipeline has dag_edges
+    exactly when its trigger_operator is set, and no edge repeats, so this
+    is the upstream_uuid filter over dag_edges."""
     _check(_UUID_RE, pipeline_uuid, "pipeline_uuid")
-    edges = catalog.table(spark, sf_dir, "dag_edges")
-    return edges.filter(F.col("upstream_uuid") == pipeline_uuid).select("pipeline_uuid")
+    full = catalog.table(spark, sf_dir, "pipeline_defs_full")
+    return full.filter(
+        F.array_contains(F.col("triggers_on.pipeline_uuids"), pipeline_uuid)
+    ).select("pipeline_uuid")
 
 
 def event_history(
@@ -215,16 +224,9 @@ def run_single_use(
 
 def incubation_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GET /pipeline/incubation (read side): runs with trigger satisfaction
-    (F13/A4 aggregate attached)."""
-    runs = catalog.table(spark, sf_dir, "incubating_runs")
-    trig = catalog.table(spark, sf_dir, "incubating_triggers")
-    sat = trig.groupBy("obj_id").agg(
-        F.bool_and(F.col("trigger_value") != "waiting").alias("all_satisfied"),
-        F.count("*").alias("n_triggers"),
-    )
-    return runs.join(sat, "obj_id", "left").withColumn(
-        "all_satisfied", F.coalesce("all_satisfied", F.lit(False))
-    )
+    (F13/A4 aggregate attached; the join is catalog's incubation_state
+    view)."""
+    return catalog.table(spark, sf_dir, "incubation_state")
 
 
 def sys_config(cfg: KalyticalSparkConfig | None = None) -> dict:

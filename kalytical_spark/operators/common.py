@@ -179,7 +179,8 @@ def materialize_session_caches(spark: SparkSession) -> None:
 # imported above — a session_memo import from catalog.py would be
 # circular): if the guard survived a reset, domain views would stay
 # registered-but-uncached, a shape neither a fresh nor a warm session ever
-# has.
+# has. Clearing the marks makes the next read of each of
+# catalog.RESIDENT_VIEWS rebuild its LocalRelation copy.
 SESSION_MEMOS.append(catalog._CURRENT_SF)
 SESSION_MEMOS.append(catalog._CACHED_DFS)
 SESSION_MEMOS.append(catalog._RESIDENT)

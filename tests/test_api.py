@@ -6,9 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kalytical_spark import api, dispatch
+from kalytical_spark import api, catalog, dispatch
 from kalytical_spark.operators import replay
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_ORACLE, SF_SMALL
 
 
 def test_list_with_prefix_and_tag(spark):
@@ -36,9 +36,29 @@ def test_input_validation_rejects_hostile_patterns(spark):
 
 
 def test_downstream_and_delete_guard_agree(spark):
-    down = {r.pipeline_uuid for r in api.downstream_pipelines(spark, SF_SMALL, "p-3").collect()}
-    guard = {r.pipeline_uuid for r in api.delete_guard(spark, SF_SMALL, "p-3").collect()}
-    assert down == guard
+    """delete_guard and downstream_pipelines both read triggers_on from the
+    resident catalog; for every pipeline, and every upstream id an edge
+    names, each must return the pipelines whose dag_edges name it upstream.
+    That holds because a pipeline has edges exactly when its
+    trigger_operator is set, and no edge repeats: both are checked here."""
+    for sf in (SF_ORACLE, SF_SMALL):
+        catalog.register(spark, sf)
+        edges = [(r.pipeline_uuid, r.upstream_uuid) for r in spark.table("dag_edges").collect()]
+        triggered = {
+            r.pipeline_uuid
+            for r in spark.table("pipeline_defs").filter(F.col("trigger_operator").isNotNull()).collect()
+        }
+        assert {d for d, _ in edges} == triggered
+        assert len(set(edges)) == len(edges)
+        want: dict[str, list[str]] = {}
+        for d, u in edges:
+            want.setdefault(u, []).append(d)
+        uuids = {r.pipeline_uuid for r in spark.table("pipeline_defs").collect()} | set(want)
+        assert len(uuids) > len(triggered)
+        for u in sorted(uuids):
+            guard = sorted(r.pipeline_uuid for r in api.delete_guard(spark, sf, u).collect())
+            down = sorted(r.pipeline_uuid for r in api.downstream_pipelines(spark, sf, u).collect())
+            assert guard == down == sorted(want.get(u, [])), (sf, u)
 
 
 def test_event_history_defaults_and_filters(spark):
@@ -57,6 +77,30 @@ def test_running_pipelines_paging(spark):
     rows = api.running_pipelines(spark, SF_SMALL).collect()
     assert 0 < len(rows) <= 10
     assert all(r.engine_status in ("running", "waiting", "pending") for r in rows)
+
+
+def test_incubation_state_is_the_trigger_join(spark):
+    """incubation_state's rows, as a multiset, are each incubating run with
+    the bool_and and count of its triggers; a run with no triggers is not
+    satisfied and has a null n_triggers."""
+    from collections import Counter
+
+    got = api.incubation_state(spark, SF_SMALL)
+    assert got.columns == [
+        "obj_id", "pipeline_uuid", "create_time", "reason", "retry_count",
+        "all_satisfied", "n_triggers",
+    ]
+    sat: dict[str, list[bool]] = {}
+    for r in spark.table("incubating_triggers").collect():
+        sat.setdefault(r.obj_id, []).append(r.trigger_value != "waiting")
+    want = Counter(
+        (*r, all(sat[r.obj_id]) if r.obj_id in sat else False, len(sat.get(r.obj_id, [])) or None)
+        for r in spark.table("incubating_runs").collect()
+    )
+    assert Counter(tuple(r) for r in got.collect()) == want
+    assert sum(want.values()) == 200
+    assert any(row[-2:] == (False, None) for row in want), "a run without triggers"
+    assert any(row[-2:] == (True, 2) for row in want), "a satisfied multi-trigger run"
 
 
 def test_engine_registry_and_submission(spark):
@@ -162,10 +206,12 @@ def _jobs_in_group(spark, group: str, action) -> int:
 
 
 def test_catalog_reads_and_single_use_launch_no_spark_job(spark):
-    """After one warm read, the pipeline-catalog endpoints are answered from
-    the driver-resident view and run_single_use mints its id from the
-    engine's own count: none of them launches a Spark job."""
+    """After one warm read, the pipeline-catalog endpoints, the delete
+    guard and incubation_state are answered from the driver-resident views
+    and run_single_use mints its id from the engine's own count: none of
+    them launches a Spark job."""
     api.describe_pipeline(spark, SF_SMALL, "p-3").collect()
+    api.incubation_state(spark, SF_SMALL).collect()
     eng = dispatch.engine_factory("LocalLedgerEngine")
     calls = {
         "describe": lambda: api.describe_pipeline(spark, SF_SMALL, "p-3").collect(),
@@ -174,6 +220,8 @@ def test_catalog_reads_and_single_use_launch_no_spark_job(spark):
         ).collect(),
         "downstream": lambda: api.downstream_pipelines(spark, SF_SMALL, "p-3").collect(),
         "body": lambda: api.fetch_pipeline_body(spark, SF_SMALL, "p-3").collect(),
+        "guard": lambda: api.delete_guard(spark, SF_SMALL, "p-4").collect(),
+        "incubation": lambda: api.incubation_state(spark, SF_SMALL).collect(),
         "single_use": lambda: api.run_single_use(
             spark, {"pipeline_uuid": "p-3", "pipeline_body": "{}"}, engine=eng
         ),

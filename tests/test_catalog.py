@@ -13,18 +13,21 @@ def test_sf_switch_rebinds_views(spark):
     n_small = spark.table("lifecycle_events").count()
     sup_small = spark.table("pipeline_defs").count()
     full_small = catalog.table(spark, SF_SMALL, "pipeline_defs_full").count()
+    inc_small = catalog.table(spark, SF_SMALL, "incubation_state").count()
     catalog.register(spark, SF_ORACLE)
     n_oracle = spark.table("lifecycle_events").count()
     sup_oracle = spark.table("pipeline_defs").count()
     full_oracle = catalog.table(spark, SF_ORACLE, "pipeline_defs_full").count()
-    assert (n_small, sup_small, full_small) == (1000, 10, 10)
-    assert (n_oracle, sup_oracle, full_oracle) == (10000, 100, 100)
+    inc_oracle = catalog.table(spark, SF_ORACLE, "incubation_state").count()
+    assert (n_small, sup_small, full_small, inc_small) == (1000, 10, 10, 200)
+    assert (n_oracle, sup_oracle, full_oracle, inc_oracle) == (10000, 100, 100, 2000)
     # and back again — the first registration must not be sticky, and the
-    # driver-resident catalog copy must be rebuilt from the new sf_dir
+    # driver-resident copies must be rebuilt from the new sf_dir
     catalog.register(spark, SF_SMALL)
     assert spark.table("lifecycle_events").count() == 1000
     assert spark.table("pipeline_defs").count() == 10
     assert catalog.table(spark, SF_SMALL, "pipeline_defs_full").count() == 10
+    assert catalog.table(spark, SF_SMALL, "incubation_state").count() == 200
 
 
 def test_sf_switch_evicts_three_tuple_memos(spark):
