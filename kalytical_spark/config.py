@@ -26,15 +26,8 @@ class KalyticalSparkConfig:
     incubating_job_culling_interval_s: int = field(
         default_factory=lambda: _env_int("KALYTICAL_CULL_INTERVAL_S", 60)
     )
-    concurrency_debounce_s: int = field(
-        default_factory=lambda: _env_int("KALYTICAL_DEBOUNCE_S", 5 * 86400)
-    )
     incubating_job_age_out_s: int = field(
         default_factory=lambda: _env_int("KALYTICAL_AGE_OUT_S", 20 * 86400)
-    )
-    # retries (utils/retry.py:9, dispatcher.py:51-55)
-    operation_retry_count: int = field(
-        default_factory=lambda: _env_int("KALYTICAL_OP_RETRIES", 3)
     )
     # paging defaults (facade.py:86,107)
     running_jobs_page_size: int = field(

@@ -136,10 +136,6 @@ _REGISTRY: dict[str, type[BaseEngine]] = {
 }
 
 
-def register_engine(name: str, cls: type[BaseEngine]) -> None:
-    _REGISTRY[name] = cls
-
-
 def engine_factory(name: str) -> BaseEngine:
     """Strategy lookup (engine.py:21-36): unknown names raise, like the
     reference's NotImplementedError branch."""

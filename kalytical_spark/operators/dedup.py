@@ -39,15 +39,7 @@ COSINE_PAIR_THRESHOLD = 0.45
 
 
 def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct 3-gram word shingles per document."""
-    return shingles_from_docs(t(spark, sf_dir, "documents"))
-
-
-def shingles_from_docs(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) from any (doc_id, text, ...) frame — factored so
-    the streaming delta-ingest path (streaming/dedup_maintenance.py) bands
-    its micro-batch docs with EXACTLY the full mine's shingle construction
-    (the stream==batch equivalence proof depends on it)."""
+    """Distinct 3-gram word shingles per document: (doc_id, shingle)."""
     from .preprocess import _grams
 
     toks = F.split(F.col("text"), " ")
@@ -62,12 +54,13 @@ def shingles_from_docs(docs: DataFrame) -> DataFrame:
     # would run in one partition and serialize all downstream hash work.
     # Hash-partition by doc_id: parallelizes minhash/signature computation
     # AND pre-aligns with the groupBy(doc_id) so no further shuffle needed.
-    n_part = docs.sparkSession.sparkContext.defaultParallelism
+    n_part = spark.sparkContext.defaultParallelism
     # docs with fewer than 3 tokens have no 3-gram shingles; without the
     # guard, sequence(0, size-3) would run descending and element_at(toks, 0)
     # would fault (the DuckDB twin's range() just yields empty)
     return (
-        docs.filter(F.size(toks) >= 3)
+        t(spark, sf_dir, "documents")
+        .filter(F.size(toks) >= 3)
         .repartition(n_part, "doc_id")
         .select("doc_id", toks.alias("ts"))
         .select("doc_id", F.explode(F.array_distinct(shingles)).alias("shingle"))

@@ -168,10 +168,9 @@ _BASELINE_HOURS = 24
 
 
 def score_rate_anomalies(hourly: DataFrame) -> DataFrame:
-    """Anomaly scorer over an (event_type, hour, c) hourly rollup — shared
-    by the batch query and the streaming twin (which materializes the same
-    rollup incrementally and scores the closed hours with THIS function, so
-    the two execution modes cannot drift)."""
+    """Anomaly scorer over an (event_type, hour, c) hourly rollup
+    (``hourly_type_counts``), split from the rollup so any source of
+    closed hours can be scored with the batch query's exact arithmetic."""
     w = (
         W.partitionBy("event_type")
         .orderBy("hour")
@@ -210,9 +209,8 @@ def score_rate_anomalies(hourly: DataFrame) -> DataFrame:
 
 
 def hourly_type_counts(ev: DataFrame) -> DataFrame:
-    """(event_type, hour, c) rollup — the batch definition the streaming
-    twin reproduces incrementally (streaming/aggregates.hourly_type_counts
-    uses a tumbling window over the same truncation)."""
+    """(event_type, hour, c) rollup of any (ts, event_type) frame — the
+    input ``score_rate_anomalies`` scores."""
     return (
         ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
         .groupBy("event_type", "hour")

@@ -356,3 +356,56 @@ def test_sf_switch_evicts_stale_memos(spark):
     assert stale_entries(), "memo for the first sf_dir should exist"
     catalog.register(spark, SF_ORACLE)
     assert not stale_entries(), "sf switch must evict the old sf_dir's memos"
+
+
+def test_date_partitioned_events_prune(spark, tmp_path):
+    """The event log's at-rest layout: date-partitioned parquet must show
+    PartitionFilters in the scan (whole days skipped without reading files)."""
+    from kalytical_spark import catalog
+    import contextlib, io
+
+    catalog.register(spark, SF_SMALL)
+    ev = spark.table("lifecycle_events")
+    out = str(tmp_path / "events_by_day")
+    ev.withColumn("dt", F.to_date("event_time")).write.mode("overwrite").partitionBy(
+        "dt"
+    ).parquet(out)
+    q = spark.read.parquet(out).filter(F.col("dt") == "2024-01-15")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q.explain("formatted")
+    plan = buf.getvalue()
+    assert "PartitionFilters" in plan
+    assert "isnotnull(dt" in plan or "dt#" in plan.split("PartitionFilters")[1].splitlines()[0]
+    # and the filter really prunes: only one partition's rows come back
+    days = {r.dt for r in q.select("dt").distinct().collect()}
+    assert days == {__import__("datetime").date(2024, 1, 15)}
+
+
+def test_dynamic_partition_pruning_fires(spark, tmp_path):
+    """Join-driven pruning: when the partitioned fact joins a dim filtered
+    on a NON-partition attribute, the fact scan must carry a dynamicpruning
+    subquery in PartitionFilters — at 100 TB this skips whole days' files
+    based on the broadcast dim result at runtime, which no static filter
+    could express."""
+    from kalytical_spark import catalog
+    import contextlib, io
+
+    catalog.register(spark, SF_SMALL)
+    ev = spark.table("lifecycle_events")
+    out = str(tmp_path / "events_by_day_dpp")
+    ev.withColumn("dt", F.to_date("event_time")).write.mode("overwrite").partitionBy(
+        "dt"
+    ).parquet(out)
+    fact = spark.read.parquet(out)
+    # calendar dim: the is_audit_day flag is NOT derivable from dt statically
+    days = fact.select("dt").distinct()
+    dim = days.withColumn("is_audit_day", F.dayofmonth("dt") == 15)
+    q = fact.join(dim.filter("is_audit_day"), "dt").groupBy("dt").count()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q.explain("formatted")
+    plan = buf.getvalue()
+    assert "dynamicpruning" in plan, plan
+    got = {r.dt.day for r in q.collect()}
+    assert got == {15}

@@ -394,3 +394,39 @@ def test_foreachbatch_dispatch_ledger(spark):
     assert len(ledger) == want
     assert len({r.tracking_id for r in ledger}) == len(ledger)
     assert all(r.batch_id is not None for r in ledger)
+
+
+def test_cron_origination_stream(spark):
+    """Hourly tick stream (with replayed ticks) originates each scheduled
+    pipeline exactly once per hour boundary with stable exec ids."""
+    from kalytical_spark.streaming import sinks
+
+    catalog.register(spark, SF_SMALL)
+    n_scheduled = (
+        spark.table("pipeline_defs").filter(F.col("schedule").isNotNull()).count()
+    )
+    ticks = spark.createDataFrame(
+        [("2024-01-01 10:00:05",), ("2024-01-01 10:30:00",),  # same hour twice
+         ("2024-01-01 11:00:01",)],
+        "tick_ts string",
+    ).select(F.col("tick_ts").cast("timestamp").alias("tick_ts"))
+    with tempfile.TemporaryDirectory() as tmp:
+        src = os.path.join(tmp, "ticks")
+        ticks.coalesce(1).write.parquet(src)
+        stream = spark.readStream.schema("tick_ts timestamp").parquet(src)
+        q = (
+            sinks.cron_origination_stream(spark, stream, SF_SMALL)
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName("cron_e2e")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            q.stop()
+        rows = spark.sql("SELECT * FROM cron_e2e").collect()
+    assert len(rows) == 2 * n_scheduled  # two distinct hour boundaries
+    assert len({(r.pipeline_uuid, r.event_time) for r in rows}) == len(rows)
+    assert all(len(r.exec_uuid) == 8 for r in rows)
