@@ -12,7 +12,8 @@ artifact. Per ingest the pipeline:
 1. assigns the delta vectors under the FROZEN base centroids (one
    broadcast K x dim matrix, one pruned scan of the delta — the base
    corpus is never re-read, never re-fit);
-2. appends the delta assignments to the stored cell table;
+2. appends the delta assignments to the stored cell table (versioned.py
+   shape in production);
 3. monitors quantizer staleness separately (emb_centroid_drift) and
    schedules a full refit only when drift crosses threshold — refit is a
    scheduled background rebuild, not a per-ingest cost.

@@ -330,6 +330,19 @@ FROM est e JOIN exact x USING (l_returnflag)
 """
 
 
+def event_value_cents_histogram(events: DataFrame) -> DataFrame:
+    """(k, d, n) decade-histogram of any frame with a positive 2-dp
+    ``value`` column, in exact integer cents — the ONE definition shared
+    by batch use and the streaming SUM-fold sink
+    (streaming/sketches.quantile_histogram_sink), so the two can never
+    drift (the cms_counters_for contract)."""
+    return _histogram(
+        events.select(
+            (F.col("value").cast("decimal(12,4)") * 100).cast("bigint").alias("v")
+        )
+    )
+
+
 def events_value_median_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type exact lower median of value-cents via a GROUPED_AGG
     pandas UDF — the one Arrow UDF flavor the rest of the engine doesn't

@@ -103,7 +103,8 @@ _H_USER = "md5('u:' || CAST(user_id AS STRING))"
 def hll_registers_for(events: DataFrame) -> DataFrame:
     """(event_type, bucket, r) registers of any (event_type, user_id)
     frame — the ONE definition of the register aggregation, shared by the
-    queries that build HLL registers, so they can never drift."""
+    batch query below and the streaming MAX-merge fold
+    (streaming/sketches.py), so the two can never drift."""
     return (
         events.selectExpr(
             "event_type",
@@ -564,6 +565,18 @@ def _counters_from_per_user(per_user: DataFrame) -> DataFrame:
         .selectExpr("cnt", "d", f"{_cms_bucket_sql(h)} AS bucket")
         .groupBy("d", "bucket")
         .agg(F.sum("cnt").cast("bigint").alias("counter"))
+    )
+
+
+def cms_counters_for(events: DataFrame) -> DataFrame:
+    """(d, bucket, counter) count-min table of any frame with a user_id
+    column — the ONE definition of the counter aggregation, shared by the
+    batch query below and the streaming SUM-fold (streaming/sketches.py),
+    so the two can never drift. Pre-aggregates per user first (map-side
+    combinable) so the D-way explode multiplies distinct users, not raw
+    rows."""
+    return _counters_from_per_user(
+        events.groupBy("user_id").agg(F.count("*").alias("cnt"))
     )
 
 

@@ -115,9 +115,10 @@ def attribution_join_outer(
 
 
 def stream_static_enrichment(events_stream: DataFrame, defs: DataFrame) -> DataFrame:
-    """Stream-static equi-join (the second join mode, besides the
-    stream-stream join above): each lifecycle micro-batch is enriched with
-    the pipeline catalog. The static side is broadcast and RE-RESOLVED per micro-batch — a catalog
+    """Stream-static equi-join (the third join mode, completing
+    stream-stream above and the foreachBatch folds in maintenance.py):
+    each lifecycle micro-batch is enriched with the pipeline catalog. The
+    static side is broadcast and RE-RESOLVED per micro-batch — a catalog
     update is visible to the next batch without restarting the query — and
     the join is stateless, so no watermark is involved. Left join: an
     event for an unknown pipeline passes through with null dims (dropping
