@@ -11,10 +11,15 @@ from dataclasses import dataclass, field
 
 
 def _env_int(name: str, default: int) -> int:
-    try:
-        return int(os.environ.get(name, default))
-    except ValueError:
+    """`default` when `name` is unset; a set value that is not an integer
+    raises instead of silently becoming the default."""
+    raw = os.environ.get(name)
+    if raw is None:
         return default
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(f"{name}={raw!r} is not an integer") from None
 
 
 @dataclass(frozen=True)

@@ -41,11 +41,6 @@ def dsum_prod(a: Column, b: Column) -> Column:
     return F.sum(a.cast(DEC) * b.cast(DEC)).cast("decimal(38,6)").cast("double")
 
 
-def davg(col: Column | str) -> Column:
-    col = F.col(col) if isinstance(col, str) else col
-    return dsum(col) / F.count(col).cast("double")
-
-
 # Oracle-side (DuckDB) macro equivalents — keep textually in sync with above.
 def sql_dsum(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(12,4))) AS DOUBLE)"
@@ -56,10 +51,6 @@ def sql_dsum_prod(a: str, b: str) -> str:
         f"CAST(CAST(SUM(CAST({a} AS DECIMAL(12,4)) * CAST({b} AS DECIMAL(12,4)))"
         f" AS DECIMAL(38,6)) AS DOUBLE)"
     )
-
-
-def sql_davg(expr: str) -> str:
-    return f"{sql_dsum(expr)} / CAST(COUNT({expr}) AS DOUBLE)"
 
 
 def app_key(spark: SparkSession) -> str:

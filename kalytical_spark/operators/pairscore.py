@@ -38,29 +38,6 @@ SWEEP_THRESHOLDS = (0.7, 0.8, 0.9)
 assert min(SWEEP_THRESHOLDS) >= LSH_VERIFY_THRESHOLD
 
 
-def _doc_grams(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, gram, c) n-gram multiset counts, JVM-side slice zip."""
-    ts = F.split(F.col("text"), " ")
-    if n == 1:
-        g = docs.select("doc_id", F.explode(ts).alias("gram"))
-    else:
-        g = docs.filter(F.size(ts) >= n).select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    *[
-                        F.slice(ts, i + 1, F.size(ts) - n + 1).alias(f"w{i}")
-                        for i in range(n)
-                    ]
-                )
-            ).alias("z"),
-        ).select(
-            "doc_id",
-            F.concat_ws(" ", *[F.col(f"z.w{i}") for i in range(n)]).alias("gram"),
-        )
-    return g.groupBy("doc_id", "gram").agg(F.count("*").alias("c"))
-
-
 def text_bleu_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clipped n-gram precision per verified near-dup pair, treating the
     lower doc_id (doc_a) as reference and the higher as candidate:

@@ -44,12 +44,6 @@ def simhash64(text: str) -> int:
     return fp
 
 
-def _simhash_i64(s: str) -> int:
-    """simhash64 two's-complemented into int64 so LongType holds all 64 bits."""
-    fp = simhash64(s)
-    return fp - (1 << 64) if fp >= (1 << 63) else fp
-
-
 def _simhash_batch(texts: pd.Series) -> pd.Series:
     """Vectorized SimHash over one Arrow batch: md5 runs once per UNIQUE
     token in the batch; the 64 bit-votes per token occurrence are a numpy

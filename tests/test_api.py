@@ -146,6 +146,18 @@ def test_sys_config_roundtrip():
     assert cfg["history_max_records"] == 20
 
 
+def test_malformed_config_setting_raises(monkeypatch):
+    """A setting that is not an integer is refused by name, never replaced
+    by its default (a mistyped TTL would silently become 20 days)."""
+    from kalytical_spark.config import load_config
+
+    monkeypatch.setenv("KALYTICAL_AGE_OUT_S", "3600")
+    assert load_config().incubating_job_age_out_s == 3600
+    monkeypatch.setenv("KALYTICAL_AGE_OUT_S", "abc")
+    with pytest.raises(ValueError, match=r"KALYTICAL_AGE_OUT_S='abc'"):
+        load_config()
+
+
 def test_running_pipelines_reference_defaults(spark):
     """facade.py:86-88 contract: default status set is
     ['running', 'waiting', 'pending'] and engine_name is a filter."""

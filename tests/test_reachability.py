@@ -5,12 +5,17 @@ The walk is static (``ast``, no Spark session). It starts from the driver
 contract, the facade, the control loop's sink, the benchmark and the tools,
 follows every import statement (lazy imports inside functions included) and
 the operator modules that ``registry._load_optional`` loads by name.
+
+A second, name-level pass does the same for functions: every top-level def
+under kalytical_spark/ must be named by some .py file in the repository
+outside its own body, so a helper nothing calls cannot linger either.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PKG = "kalytical_spark"
@@ -125,3 +130,66 @@ def test_every_package_module_is_reached():
     assert kept <= mods - reached, f"stale exceptions: {sorted(kept & reached)}"
     unreached = sorted(mods - reached - kept)
     assert not unreached, f"modules only their own tests import: {unreached}"
+
+
+def _repo_py_files() -> list[str]:
+    paths = []
+    for dirpath, dirs, files in os.walk(_REPO):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "__pycache__"))]
+        paths.extend(os.path.join(dirpath, f) for f in files if f.endswith(".py"))
+    return sorted(paths)
+
+
+def _docstrings(tree: ast.AST) -> set[int]:
+    """ids of the docstring constants, which name things but call nothing."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ) and ast.get_docstring(node, clean=False) is not None:
+            out.add(id(node.body[0].value))
+    return out
+
+
+def _names_used(tree: ast.AST, skip: set[int]) -> list[str]:
+    """Every identifier a subtree uses: names, attributes, imported names
+    and the identifier-shaped words of string constants (by-name loads such
+    as getattr or registry strings), docstrings excepted."""
+    names = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            names.append(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.append(node.attr)
+        elif isinstance(node, ast.alias):
+            names.append(node.name.rpartition(".")[2])
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in skip
+        ):
+            names.extend(re.findall(r"[A-Za-z_]\w*", node.value))
+    return names
+
+
+def test_every_package_def_is_named():
+    """A top-level def under kalytical_spark/ that no .py file names outside
+    its own body is dead code: nothing can call it."""
+    pkg = os.path.join(_REPO, _PKG)
+    defs: list[tuple[str, str]] = []
+    used: set[str] = set()
+    for path in _repo_py_files():
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        skip = _docstrings(tree)
+        rel = os.path.relpath(path, _REPO)
+        for node in tree.body:
+            own = isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            if own and path.startswith(pkg + os.sep):
+                defs.append((rel, node.name))
+            names = _names_used(node, skip)
+            if own:  # a def naming itself (recursion) does not count
+                names = [n for n in names if n != node.name]
+            used.update(names)
+    unnamed = sorted(f"{rel}:{name}" for rel, name in defs if name not in used)
+    assert not unnamed, f"top-level defs nothing names: {unnamed}"
