@@ -4,33 +4,25 @@ collapse to ONE canonical keeper instead of the pairwise view leaving
 a/c both alive. This is the step a production dedup pipeline runs between
 pair mining and document selection.
 
-Shape: driver union-find up to DRIVER_CC_MAX_EDGES edges, distributed
-doubling loop above. The verified pair list is read back with one bounded
-collect (limit(N + 1): one row past the bound detects overflow without a
-count). A graph that fits is labelled on the driver by union-find and
-handed back as a JVM LocalRelation, so every later read of the labels is
-planned locally and runs no job. Kiveris et al. (SoCC 2014) run
-distributed rounds only for graphs that do not fit on one machine; each
-round here is a blocking Spark job, so a few-kilobyte graph pays seconds
-of job overhead for microseconds of work.
+Shape: driver union-find over a bounded read. The verified pair list is
+read back with one limit(N + 1) Arrow collect (one row past the bound
+detects overflow without a count), labelled on the driver by union-find
+and handed back as a JVM LocalRelation, so every later read of the labels
+is planned locally and runs no job. Kiveris et al. (SoCC 2014) run
+distributed rounds only for graphs that do not fit on one machine; the
+verified graph of a curation build is a few kilobytes (254 edges at the
+benchmark's scale), and a distributed min-label/doubling loop paid one
+blocking Spark job per round for it. Measured against that loop at
+1,000,000 edges (4-core VM, local[4]), the driver was faster on every
+shape: a star took 4.5 s against the loop's 26.2 s, and a path with
+shuffled ids 4.8 s against 370 s, after which the loop still had no
+fixpoint at its 50-round cap. A graph above DRIVER_CC_MAX_EDGES raises
+instead of being labelled.
 
-Fallback above the bound: iterative min-label propagation PLUS
-pointer-doubling (Shiloach-Vishkin shortcutting: label(v) <-
-label(label(v))) expressed as DataFrame joins, with a driver-side scalar
-convergence check per iteration. label(x) <= x is an invariant (labels
-start at self and only decrease), so the shortcut join can only lower
-labels and the label SUM stays a monotone convergence witness the driver
-reads as ONE scalar per round. Propagation alone needs O(component
-diameter) rounds; the doubling step shortens pointer chains, but without
-a hooking step it does not give O(log diameter): a path with shuffled ids
-took 20 rounds at 64 vertices and 42 at 256. MAX_CC_ITERS bounds the
-rounds, and a graph still moving after them raises rather than returning
-split components.
-
-Both paths give component_id = the component's minimum doc_id. The DuckDB
-twin is a recursive CTE (root reachability + MIN(root) per vertex) — a
-genuinely different algorithm computing the same fixpoint, which makes
-the oracle check a strong differential test of the labelling.
+component_id = the component's minimum doc_id. The DuckDB twin is a
+recursive CTE (root reachability + MIN(root) per vertex) — a genuinely
+different algorithm computing the same fixpoint, which makes the oracle
+check a strong differential test of the labelling.
 """
 
 from __future__ import annotations
@@ -43,28 +35,21 @@ from pyspark.sql import functions as F
 from .common import app_key, session_memo
 from .dedup import LSH_VERIFY_THRESHOLD, _sql_minhash_lsh_ctes, dedup_minhash_lsh
 
-MAX_CC_ITERS = 50
-
 DRIVER_CC_MAX_EDGES = 1_000_000
-"""Largest verified edge list labelled on the driver; one more edge sends
-the graph to the doubling loop.
+"""Largest verified edge list the driver labels; one more edge raises.
 
-Driver memory at the bound (measured on a 1,000,000-edge path): the edges
-arrive as two int64 Arrow columns and union-find keeps one Python list of
-parent slots, which raised the Python process's peak RSS by 149 MB; the
-labels, a LocalRelation of 1,000,001 two-long rows, hold 83 MB of driver
-heap after GC. Both fit a 1 GB default driver and are a small share of
-the half-of-RAM heap `session.get_spark` asks for.
-
-Crossover, measured at N = 1,000,000 edges on a 4-core VM (local[4],
-`session.get_spark`), wall time from the cached edge frame to the labels
-collected as Arrow:
-  - path with shuffled ids: driver 4.8 s; the loop ran all 50 rounds in
-    370 s and raised without a fixpoint;
-  - star: driver 4.5 s; the loop 26.2 s (it converges in a few rounds).
-The driver path is faster on the loop's best case as on its worst, so
-the bound is set by driver memory, not speed. Reading the same N edges as
-PySpark Rows (`collect()`) alone took 4.2-4.4 s, hence the Arrow read."""
+Set by driver memory. The labels are a LocalRelation on the driver heap,
+one two-long row per vertex, and a graph has at most two vertices per
+edge. Measured at 1,000,000 edges (4-core VM, local[4], heap after GC
+and Python peak RSS above the cached edge frame):
+  - perfect matching (2,000,000 vertices, the worst case): 177 MB of
+    heap, about 89 B per label row; Python +248 MB; 5.0 s;
+  - path with shuffled ids (1,000,001 vertices): 82 MB; +156 MB; 4.2 s;
+  - star (1,000,001 vertices): 82 MB; +111 MB; 3.1 s.
+Keeping the worst case within a fifth of the 1 GB heap a default driver
+gets (spark.driver.memory=1g), leaving the rest to the cached corpus and
+plans a curation build holds, allows about 1,150,000 edges; the bound is
+that rounded down. Above it the bounded read costs 1.1 s before raising."""
 
 # session-scoped memo: the four queries below share one labels
 # computation per sf_dir (replay._DECISIONS_CACHE precedent). Keyed by
@@ -86,28 +71,23 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _label_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     """(doc_id, component_id) over the undirected graph whose edges are the
-    (doc_a, doc_b) rows of `pairs`: driver union-find when at most
-    DRIVER_CC_MAX_EDGES edges come back from one bounded collect, the
-    distributed doubling loop otherwise."""
-    pairs = pairs.select("doc_a", "doc_b")
-    edges = pairs.limit(DRIVER_CC_MAX_EDGES + 1).toArrow()
+    (doc_a, doc_b) rows of `pairs`, by union-find on the driver. Vertices
+    are renumbered to their rank in sorted doc_id order, so min-root union
+    (the smaller root always wins) leaves every component rooted at its
+    minimum doc_id. Returned as a LocalRelation: a pyarrow Table goes to
+    the JVM as Arrow batches whatever spark.sql.execution.arrow.pyspark
+    .enabled says, and an empty one keeps the schema; a Python row list
+    would give a LogicalRDD, which launches a job on every read. The
+    edges are read as Arrow too: reading 1,000,000 of them as PySpark
+    Rows took 4.2-4.4 s, about the whole Arrow-based labelling."""
+    edges = pairs.select("doc_a", "doc_b").limit(DRIVER_CC_MAX_EDGES + 1).toArrow()
     if edges.num_rows > DRIVER_CC_MAX_EDGES:
-        return _doubling_labels(spark, pairs)
-    return _driver_labels(
-        spark, edges.column("doc_a").to_numpy(), edges.column("doc_b").to_numpy()
-    )
-
-
-def _driver_labels(
-    spark: SparkSession, doc_a: np.ndarray, doc_b: np.ndarray
-) -> DataFrame:
-    """Union-find over the edge arrays. Vertices are renumbered to their
-    rank in sorted doc_id order, so min-root union (the smaller root
-    always wins) leaves every component rooted at its minimum doc_id.
-    Returned as a LocalRelation: a pyarrow Table goes to the JVM as Arrow
-    batches whatever spark.sql.execution.arrow.pyspark.enabled says, and
-    an empty one keeps the schema; a Python row list would give a
-    LogicalRDD, which launches a job on every read."""
+        raise RuntimeError(
+            f"near-duplicate graph has more than {DRIVER_CC_MAX_EDGES:,} "
+            "verified edges, the most connected components labels on the driver"
+        )
+    doc_a = edges.column("doc_a").to_numpy()
+    doc_b = edges.column("doc_b").to_numpy()
     ids, idx = np.unique(np.concatenate([doc_a, doc_b]), return_inverse=True)
     parent = list(range(len(ids)))
 
@@ -127,115 +107,6 @@ def _driver_labels(
     roots = np.fromiter((find(x) for x in range(len(ids))), np.int64, len(ids))
     labels = pa.table({"doc_id": ids, "component_id": ids[roots]})
     return spark.createDataFrame(labels, "doc_id long, component_id long")
-
-
-def _doubling_labels(spark: SparkSession, pairs: DataFrame) -> DataFrame:
-    """The distributed fallback: min-label propagation plus pointer
-    doubling over the (doc_a, doc_b) edge frame, one blocking job per
-    round."""
-
-    def _ckpt_rdd_id(df: DataFrame) -> int:
-        """The checkpointed RDD id behind a localCheckpoint'ed frame (its
-        analyzed plan is a LogicalRDD wrapping exactly that RDD)."""
-        return df._jdf.queryExecution().analyzed().rdd().id()
-
-    def _free(rdd_id: int) -> None:
-        """Release a superseded round's localCheckpoint blocks NOW.
-        DataFrame.unpersist() does not touch checkpoint storage (verified:
-        block count unchanged) and ContextCleaner only frees it after an
-        eventual driver GC — on a large dup graph that transiently stacks
-        up to O(log diameter) full label sets in executor memory. The
-        blocks ARE the checkpointed data, so only ever free a round that
-        no later plan references."""
-        spark.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
-
-    def _unestimated(df: DataFrame) -> DataFrame:
-        """The same rows behind a plan with no carried size estimate. A
-        checkpoint keeps its input plan's estimate, and a join estimates
-        the product of its sides, so carried from round to round the
-        estimate's digit count doubles each round (measured: 102 bits
-        after round 1, 7,620 after round 7) until BigInt arithmetic in
-        planning, not the joins, dominates: a shuffled 256-vertex path ran
-        for minutes. Re-wrapping the checkpointed rows resets it."""
-        jdf = df._jdf
-        return DataFrame(
-            spark._jsparkSession.createDataFrame(jdf.javaRDD(), jdf.schema()), spark
-        )
-
-    # undirected edge list: both orientations of every pair
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .cache()
-    )
-    # localCheckpoint after every round: the doubling step references
-    # the round's result TWICE, so without lineage truncation the logical
-    # plan doubles per iteration and Catalyst analysis alone goes
-    # exponential. Checkpointing keeps the driver-side plan O(1) per round
-    # and bounds executor recompute. (On a multi-executor cluster an
-    # iterative job that must survive executor loss would use reliable
-    # `checkpoint()` against the checkpoint dir instead — same shape.)
-    #
-    # The checkpoint is LAZY and the convergence sum is the materializing
-    # action (r12, VERDICT r11 item 3): eager=True ran TWO blocking jobs
-    # per round (the checkpoint count, then the sum over the stored
-    # blocks); a lazy checkpoint whose first action is the sum persists
-    # the blocks and reports convergence in ONE job. Safe here, unlike
-    # the multi-consumer lazy-pin race (text.py r12 note): the sum is the
-    # SOLE first consumer — by the time the loop body's joins reference
-    # the round's labels twice, its blocks are already stored.
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint(eager=False)
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0] or 0
-    labels, labels_rdd_id = _unestimated(labels), _ckpt_rdd_id(labels)
-    for _ in range(MAX_CC_ITERS):
-        nbr = (
-            edges.join(labels, edges["dst"] == labels["doc_id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        propagated = labels.join(nbr, labels["doc_id"] == nbr["src"], "left").select(
-            "doc_id",
-            F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-        )
-        # pointer doubling: label(v) <- label(label(v)). Valid because
-        # label(x) <= x always holds, so the hop only decreases labels and
-        # shortens the remaining pointer chains.
-        parent = propagated.select(
-            F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
-        )
-        new_labels = (
-            propagated.join(parent, propagated["label"] == parent["p_id"], "left")
-            .select(
-                "doc_id",
-                F.coalesce("p_label", "label").alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # labels only decrease: an unchanged sum IS the fixpoint (scalar
-        # collect — the driver never holds per-row state). This ONE job
-        # both persists the round's checkpoint blocks and reports the sum.
-        new_sum = new_labels.agg(F.sum("label")).first()[0] or 0
-        _free(labels_rdd_id)  # the superseded round is never read again
-        labels, labels_rdd_id = _unestimated(new_labels), _ckpt_rdd_id(new_labels)
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        # labels short of the fixpoint split components: refuse them
-        _free(labels_rdd_id)
-        edges.unpersist()
-        raise RuntimeError(
-            f"connected components did not converge in {MAX_CC_ITERS} rounds"
-        )
-    edges.unpersist()
-    return labels.select("doc_id", F.col("label").alias("component_id"))
 
 
 _SQL_CC = f"""WITH RECURSIVE {_sql_minhash_lsh_ctes()},

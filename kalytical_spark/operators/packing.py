@@ -159,7 +159,7 @@ def _assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shuffle, not the sort/window above it. localCheckpoint blocks
         # are released with the frame by the context cleaner (the bpe.py
         # iterative-state convention; on a cluster that must survive
-        # executor loss, reliable checkpoint() — components.py note).
+        # executor loss, reliable checkpoint() — DEPLOY.md section 5).
         rest = rest.localCheckpoint()
         parts.append(kept)
     solos = rest.select(

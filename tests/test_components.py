@@ -1,7 +1,6 @@
-"""Connected components: the driver union-find path and the distributed
-doubling loop it falls back to above DRIVER_CC_MAX_EDGES must label the
-same edges identically. The oracle gate's graphs all fit under the bound,
-so these tests are what still runs the loop."""
+"""Connected components: driver union-find labels every component with its
+minimum doc_id, hands the labels back as a LocalRelation, and refuses a
+graph above DRIVER_CC_MAX_EDGES."""
 
 from __future__ import annotations
 
@@ -34,35 +33,45 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
 
 
-def _both_paths(spark, monkeypatch, pairs):
-    """(driver labels, loop labels) of one edge frame, each as a dict."""
-    driver = components._label_components(spark, pairs)
-    monkeypatch.setattr(components, "DRIVER_CC_MAX_EDGES", 0)
-    loop = components._label_components(spark, pairs)
-    monkeypatch.undo()
-    assert _plan(driver) == "LocalRelation"
-    assert _plan(loop) != "LocalRelation", "the bound did not force the loop"
-    assert driver.dtypes == loop.dtypes == _LABELS
-    return (
-        {r.doc_id: r.component_id for r in driver.collect()},
-        {r.doc_id: r.component_id for r in loop.collect()},
-    )
+def _reference(edges) -> dict[int, int]:
+    """Minimum reachable id per vertex, by graph search: a different
+    algorithm from union-find with the same answer."""
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out: dict[int, int] = {}
+    for start in adj:
+        if start in out:
+            continue
+        seen, todo = {start}, [start]
+        while todo:
+            for w in adj[todo.pop()] - seen:
+                seen.add(w)
+                todo.append(w)
+        out.update(dict.fromkeys(seen, min(seen)))
+    return out
 
 
-def test_forced_fallback_matches_driver_on_verified_pairs(spark, monkeypatch):
+def _labels(spark, pairs) -> dict[int, int]:
+    df = components._label_components(spark, pairs)
+    assert _plan(df) == "LocalRelation"
+    assert df.dtypes == _LABELS
+    return {r.doc_id: r.component_id for r in df.collect()}
+
+
+def test_labels_match_graph_search_on_verified_pairs(spark):
     pairs = dedup.dedup_minhash_lsh(spark, SF_ORACLE)
-    driver, loop = _both_paths(spark, monkeypatch, pairs)
-    assert driver and driver == loop
-    assert len(set(driver.values())) < len(driver), "no multi-doc component"
+    got = _labels(spark, pairs)
+    assert got and got == _reference(pairs.select("doc_a", "doc_b").collect())
+    assert len(set(got.values())) < len(got), "no multi-doc component"
 
 
-def test_forced_fallback_matches_driver_on_shuffled_path(spark, monkeypatch):
-    """A 64-vertex path whose ids are shuffled: min-label propagation alone
-    needs up to 63 rounds, so the loop has to double its pointers several
-    times before the labels settle."""
-    edges = _shuffled_path(64)
-    driver, loop = _both_paths(spark, monkeypatch, _pairs(spark, edges))
-    assert driver == loop == {v: 1000 for v in range(1000, 1064)}
+def test_shuffled_path_is_one_component(spark):
+    """A 64-vertex path whose ids are shuffled: union order follows the
+    shuffle, so the minimum id is joined in from the middle of the chain."""
+    got = _labels(spark, _pairs(spark, _shuffled_path(64)))
+    assert got == {v: 1000 for v in range(1000, 1064)}
 
 
 def test_empty_graph_gives_empty_labels(spark):
@@ -84,9 +93,14 @@ def test_labels_reread_as_local_relation_without_jobs(spark):
     assert sc.statusTracker().getJobIdsForGroup("cc-reread") == []
 
 
-def test_unconverged_loop_raises(spark, monkeypatch):
-    """Labels short of the fixpoint split components; the loop must refuse
-    them instead of returning them once MAX_CC_ITERS runs out."""
-    monkeypatch.setattr(components, "MAX_CC_ITERS", 3)
-    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
-        components._doubling_labels(spark, _pairs(spark, _shuffled_path(64)))
+def test_graph_above_bound_raises(spark, monkeypatch):
+    """A graph at the bound is labelled; one edge more raises instead of
+    filling the driver."""
+    monkeypatch.setattr(components, "DRIVER_CC_MAX_EDGES", 3)
+    assert _labels(spark, _pairs(spark, [(5, 9), (9, 7), (2, 3)])) == {
+        2: 2, 3: 2, 5: 5, 7: 5, 9: 5
+    }
+    with pytest.raises(RuntimeError, match="more than 3 verified edges"):
+        components._label_components(
+            spark, _pairs(spark, [(5, 9), (9, 7), (2, 3), (3, 4)])
+        )
