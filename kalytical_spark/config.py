@@ -27,10 +27,7 @@ class KalyticalSparkConfig:
     """Operational knobs mirroring the reference's config attributes (values
     the reference leaves unset get deliberate defaults here)."""
 
-    # culler / incubation (job_culler.py:12,22,35)
-    incubating_job_culling_interval_s: int = field(
-        default_factory=lambda: _env_int("KALYTICAL_CULL_INTERVAL_S", 60)
-    )
+    # incubation age-out (job_culler.py:35)
     incubating_job_age_out_s: int = field(
         default_factory=lambda: _env_int("KALYTICAL_AGE_OUT_S", 20 * 86400)
     )
@@ -43,21 +40,6 @@ class KalyticalSparkConfig:
     )
     history_max_records: int = field(
         default_factory=lambda: _env_int("KALYTICAL_HISTORY_MAX_RECORDS", 20)
-    )
-    # stream-source seam (S7/ST1): the reference's SQS poller becomes a
-    # config-selected readStream source (streaming/sources.py)
-    stream_source: str = field(
-        default_factory=lambda: os.environ.get("KALYTICAL_STREAM_SOURCE", "file")
-    )
-    kafka_bootstrap_servers: str = field(
-        default_factory=lambda: os.environ.get(
-            "KALYTICAL_KAFKA_BOOTSTRAP", "localhost:9092"
-        )
-    )
-    kafka_topic: str = field(
-        default_factory=lambda: os.environ.get(
-            "KALYTICAL_KAFKA_TOPIC", "kalytical-lifecycle-events"
-        )
     )
 
 

@@ -14,7 +14,6 @@ from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class EngineNotImplementedError(NotImplementedError):
@@ -143,46 +142,3 @@ def engine_factory(name: str) -> BaseEngine:
         return _REGISTRY[name]()
     except KeyError as exc:
         raise EngineNotImplementedError(f"engine not registered: {name}") from exc
-
-
-def submit_fires(
-    spark: SparkSession, fires: DataFrame, engine: BaseEngine, limit: int | None = None
-) -> DataFrame:
-    """UD4 within-engine analog: hand a fire-decision frame to an engine and
-    return its ledger. Driver-side iteration is bounded (limit) — the real
-    sink is foreachBatch, which keeps submission on the streaming path.
-
-    The bound is a guardrail, not a sampler: a fire set larger than the
-    limit raises instead of silently dropping the tail (dropped fires are
-    lost work orders — no silent caps)."""
-    n = limit if limit is not None else 1000
-    if n == 0:
-        # explicit 0 means "submit none, just hand back the ledger" — a
-        # deliberate no-op, not an overflow (api.py's pagination documents
-        # the same limit=0-means-none convention)
-        return engine.ledger(spark)
-    # deterministic submission set AND replay indices: an unordered
-    # limit().collect() returns an arbitrary subset in arbitrary order,
-    # which would make the content-addressed tracking ids differ run-to-run
-    rows = (
-        fires.select("pipeline_uuid", "sources", "fired_at")
-        .orderBy("fired_at", "pipeline_uuid")
-        .limit(n + 1)  # one past the cap: detects overflow without a count()
-        .collect()
-    )
-    if len(rows) > n:
-        raise ValueError(
-            f"fire set exceeds the driver-side submission limit ({n}); "
-            "refusing to silently drop fires — raise the limit or route "
-            "through the streaming foreachBatch sink"
-        )
-    for i, r in enumerate(rows):
-        engine.submit(
-            spark,
-            {
-                "pipeline_uuid": r.pipeline_uuid,
-                "exec_uuid": f"replay{i:06d}",
-                "retry_count": 0,
-            },
-        )
-    return engine.ledger(spark)

@@ -8,11 +8,10 @@ are never re-mined or re-verified.
 
 The delta here is a deterministic slice of the fixture corpus (doc_id %
 10 == 0 plays "today's shard"). In production the base band table is a
-stored artifact (one row per (doc, band) — versioned.py shape) appended
-per ingest; this query recomputes it from the corpus because the fixture
-has no ingest history, but the JOIN SHAPE — delta bands x all bands, never
-all x all — is the deliverable, and the plan shows it (the delta side is
-a pruned scan).
+stored artifact (one row per (doc, band)) appended per ingest; this query
+recomputes it from the corpus because the fixture has no ingest history,
+but the JOIN SHAPE — delta bands x all bands, never all x all — is the
+deliverable, and the plan shows it (the delta side is a pruned scan).
 
 Correctness: banding reuses dedup.banded_signatures verbatim (same slices,
 same band keys), and the oracle is the FULL mine's lsh_pairs CTE filtered

@@ -9,9 +9,8 @@ merged into the old aggregate with one outer join.
 
 The reference mutates Mongo documents in place with no derived-state
 maintenance (src/kalytical/core/data_provider.py:34-58); this is the
-table-format-era generalization of that mutation family, composing with
-kalytical_spark/versioned.py snapshots (diff_versions is the same keyed
-fingerprint diff used here).
+table-format-era generalization of that mutation family over two
+snapshot DataFrames.
 
 Scale notes:
 * The diff is a keyed full-outer join of two snapshot scans — no collect,
@@ -71,7 +70,7 @@ def diff_snapshots(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
     """Row-level CDC between two snapshot DataFrames: one row per changed
     key carrying both sides' payloads and change_type in ('added',
     'removed', 'changed'). Unchanged keys are dropped by a whole-row
-    fingerprint comparison (same protocol as versioned.diff_versions)."""
+    fingerprint comparison."""
     cols = sorted(c for c in old.columns if c != key)
     fp = F.md5(F.to_json(F.struct(*[F.col(c) for c in cols])))
     o = old.select(

@@ -4,13 +4,12 @@ CMS = frequency, Bloom = membership, bitmaps = sets; sketches.py).
 
 State is one bigint counter per (n_digits, leading_digit) bin over the
 positive-integer measure — at most 9 bins per decade, ~170 bins for the
-full bigint range — constant-size, SUM-mergeable (the same replay regime
-as the CMS counters: streaming folds or per-executor partials merge by
-addition), map-side combinable, and the estimate math is pure integer
-arithmetic. Relative error is bounded by the bin width: the true value
-lies in [d*10^(k-1), (d+1)*10^(k-1)), so an estimate-at-bin-floor is
-never more than one part in d below the truth (<= ~11% in the worst bin,
-d=9 tightens it to ~1.2%).
+full bigint range — constant-size, SUM-mergeable (per-executor partials
+merge by addition, like the CMS counters), map-side combinable, and the
+estimate math is pure integer arithmetic. Relative error is bounded by the
+bin width: the true value lies in [d*10^(k-1), (d+1)*10^(k-1)), so an
+estimate-at-bin-floor is never more than one part in d below the truth
+(<= ~11% in the worst bin, d=9 tightens it to ~1.2%).
 
 Unlike t-digest/KLL the bin layout is FIXED, so the whole sketch — build,
 merge, and quantile readout — is deterministic integer arithmetic that
@@ -328,19 +327,6 @@ SELECT e.l_returnflag,
        x.exact_cents >= e.est_lo AND x.exact_cents < e.est_hi AS exact_in_bin
 FROM est e JOIN exact x USING (l_returnflag)
 """
-
-
-def event_value_cents_histogram(events: DataFrame) -> DataFrame:
-    """(k, d, n) decade-histogram of any frame with a positive 2-dp
-    ``value`` column, in exact integer cents — the ONE definition shared
-    by batch use and the streaming SUM-fold sink
-    (streaming/sketches.quantile_histogram_sink), so the two can never
-    drift (the cms_counters_for contract)."""
-    return _histogram(
-        events.select(
-            (F.col("value").cast("decimal(12,4)") * 100).cast("bigint").alias("v")
-        )
-    )
 
 
 def events_value_median_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,18 +1,12 @@
-"""Scheduling + IO-surface operators: cron origination (ST12), bounded log
-retrieval (S10), and source/sink format round-trips (the connector surface a
-Spark engine exposes beyond the reference's Mongo+SQS pair).
+"""Scheduling operators: cron origination (ST12), with the vixie 5-field
+grammar compiled to SQL for both Spark and the DuckDB oracle.
 
 Reference citations (paths relative to /root/reference):
   ST12 cron origination  src/kalytical/core/ext_sched.py:21-54,
                          src/kalytical/core/data_provider.py:69-88
-  S10  bounded log fetch src/kalytical/core/engine.py:152-160
-  S3   append sinks      src/kalytical/core/data_provider.py:128-131
 """
 
 from __future__ import annotations
-
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -232,139 +226,6 @@ WHERE d.schedule IS NOT NULL
 """
 
 
-def read_job_logs(spark: SparkSession, log_path: str, max_kb: int = 10, tail_lines: int = 999) -> DataFrame:
-    """S10: bounded log retrieval — spark.read.text over captured pod logs
-    with the reference's caps (max_kb default 10, tail_lines 999;
-    engine.py:152-160). Returns the last `tail_lines` lines within the byte
-    budget, newest last."""
-    lines = spark.read.text(log_path).withColumn(
-        "line_id", F.monotonically_increasing_id()
-    )
-    tail = lines.orderBy(F.desc("line_id")).limit(tail_lines)
-    budget = max_kb * 1024
-    from pyspark.sql import Window as W
-
-    # unpartitioned window is SAFE here and only here: the frame is the
-    # already-limit(tail_lines)-bounded tail, <= 999 rows by the
-    # reference's own cap — never the raw log
-    w = W.orderBy(F.desc("line_id")).rowsBetween(W.unboundedPreceding, 0)
-    bounded = (
-        tail.withColumn("cum_bytes", F.sum(F.length("value") + 1).over(w))
-        .filter(F.col("cum_bytes") <= budget)
-        .orderBy(F.asc("line_id"))
-        .select(F.col("value").alias("line"))
-    )
-    return bounded
-
-
-def roundtrip_formats(spark: SparkSession, sf_dir: str, out_dir: str | None = None) -> DataFrame:
-    """Source/sink surface: write the pipeline catalog to json + csv + orc
-    (+ partitioned parquet for the event log) and read each back, proving
-    schema-stable round-trips. Returns per-format row counts."""
-    defs = t(spark, sf_dir, "pipeline_defs")
-    ev = t(spark, sf_dir, "lifecycle_events").limit(1000)
-    base = out_dir or tempfile.mkdtemp(prefix="kalytical_io_")
-    results = []
-    json_path = os.path.join(base, "defs_json")
-    defs.write.mode("overwrite").json(json_path)
-    results.append(("json", spark.read.json(json_path).count()))
-    csv_path = os.path.join(base, "defs_csv")
-    defs.write.mode("overwrite").option("header", True).csv(csv_path)
-    results.append(
-        ("csv", spark.read.option("header", True).schema(defs.schema).csv(csv_path).count())
-    )
-    orc_path = os.path.join(base, "defs_orc")
-    defs.write.mode("overwrite").orc(orc_path)
-    results.append(("orc", spark.read.orc(orc_path).count()))
-    # date-partitioned parquet: the layout the event log uses at scale
-    pq_path = os.path.join(base, "events_parquet")
-    ev.withColumn("dt", F.to_date("event_time")).write.mode("overwrite").partitionBy(
-        "dt"
-    ).parquet(pq_path)
-    results.append(("parquet_partitioned", spark.read.parquet(pq_path).count()))
-    return spark.createDataFrame(results, schema="format string, n_rows long")
-
-
 QUERIES: dict[str, tuple] = {
     "cron_due_originations": (cron_due_originations, ORACLE_CRON_DUE),
 }
-
-
-# --- Python UDTF surface: cron schedule preview -----------------------------
-# An independent PURE-PYTHON implementation of the same vixie grammar the
-# JVM grid (cron_matched_minutes) compiles to SQL, exposed as a Spark 4
-# table function. Two jobs: (a) cover the UDTF API surface (LATERAL
-# per-row expansion from Python); (b) serve as a third, engine-free
-# implementation of the cron semantics — tests assert UDTF == JVM grid on
-# the fixture schedules, so a grammar regression must break two
-# independent codebases identically to slip through. The JVM grid remains
-# the production scan path (the UDTF is a Python-worker path, priced
-# accordingly — preview/debug tooling, not the origination tick).
-
-
-def _py_cron_field_match(tok: str, val: int, first: int, dow: bool = False) -> bool:
-    """Pure-Python twin of _cron_field_match_sql — same grammar, same
-    */step phase anchored at the field's first legal value, same vixie
-    7==Sunday dow alias (value 0 also matches whenever 7 would)."""
-    if dow and val == 0 and _py_cron_field_match(tok, 7, first):
-        return True
-    if tok == "*":
-        return True
-    for e in tok.split(","):
-        base, _, steps = e.partition("/")
-        step = int(steps) if steps else 1
-        if base == "*":
-            if (val - first) % step == 0:
-                return True
-        elif "-" in base:
-            lo, hi = (int(x) for x in base.split("-"))
-            if lo <= val <= hi and (val - lo) % step == 0:
-                return True
-        elif val == int(base):
-            return True
-    return False
-
-
-def py_cron_matches(schedule: str, ts) -> bool:
-    """Does this minute match the 5-field schedule? Includes the vixie
-    dom/dow quirk: when BOTH day fields are restricted (token not
-    star-flagged), either matching suffices."""
-    mi, hr, dom, mon, dow = schedule.split(" ")
-    checks = {
-        "minute": _py_cron_field_match(mi, ts.minute, 0),
-        "hour": _py_cron_field_match(hr, ts.hour, 0),
-        "dom": _py_cron_field_match(dom, ts.day, 1),
-        "month": _py_cron_field_match(mon, ts.month, 1),
-        # Python weekday(): Mon=0..Sun=6; cron: Sun=0..Sat=6 (7 aliases 0)
-        "dow": _py_cron_field_match(dow, (ts.weekday() + 1) % 7, 0, dow=True),
-    }
-    if not dom.startswith("*") and not dow.startswith("*"):
-        day_ok = checks["dom"] or checks["dow"]
-    else:
-        day_ok = checks["dom"] and checks["dow"]
-    return checks["minute"] and checks["hour"] and checks["month"] and day_ok
-
-
-class CronPreviewUDTF:
-    """`cron_preview(schedule, base_ts, horizon_minutes)` -> one row per
-    matching minute in (base, base + horizon] — registered via
-    ``register_cron_preview`` and consumed with a LATERAL join."""
-
-    def eval(self, schedule: str, base_ts, horizon_minutes: int):
-        import datetime
-
-        if schedule is None or base_ts is None:
-            return
-        base = base_ts.replace(second=0, microsecond=0)
-        for m in range(1, int(horizon_minutes) + 1):
-            cand = base + datetime.timedelta(minutes=m)
-            if py_cron_matches(schedule, cand):
-                yield (cand,)
-
-
-def register_cron_preview(spark: SparkSession) -> None:
-    from pyspark.sql.functions import udtf
-
-    spark.udtf.register(
-        "cron_preview", udtf(CronPreviewUDTF, returnType="fire_ts timestamp")
-    )

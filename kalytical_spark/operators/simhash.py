@@ -30,25 +30,11 @@ HAMMING_THRESHOLD = 3
 N_BANDS = 4  # 16 bits each; d <= 3 guarantees >= 1 exact band match
 
 
-def simhash64(text: str) -> int:
-    """64-bit SimHash over whitespace tokens (md5-seeded bit votes)."""
-    votes = [0] * 64
-    for tok in text.split(" "):
-        h = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
-        for b in range(64):
-            votes[b] += 1 if (h >> b) & 1 else -1
-    fp = 0
-    for b in range(64):
-        if votes[b] > 0:
-            fp |= 1 << b
-    return fp
-
-
 def _simhash_batch(texts: pd.Series) -> pd.Series:
     """Vectorized SimHash over one Arrow batch: md5 runs once per UNIQUE
     token in the batch; the 64 bit-votes per token occurrence are a numpy
     unpackbits + scatter-add, not a per-token Python loop. Bit-for-bit
-    identical to simhash64 (the pure-Python reference pinned in tests)."""
+    identical to the pure-Python per-token reference pinned in tests."""
     import numpy as np
 
     token_lists = [t.split(" ") for t in texts]

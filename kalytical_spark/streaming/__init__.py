@@ -1,4 +1,5 @@
 """Streaming control layer: the reference's event loop (SQS poller ->
-dispatcher -> incubation -> culler) as Structured Streaming, plus the shared
-pure transition function that the batch replay engine folds with.
+dispatcher -> incubation) as one Structured Streaming query into the
+dispatch ledger, plus the shared pure transition function that the batch
+replay engine folds with.
 """

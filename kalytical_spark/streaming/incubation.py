@@ -15,7 +15,7 @@ Upgrades over the reference, by design (SURVEY.md section 4.3):
   deletes SQS messages even on failure — at-most-once, mq_poller.py:30);
 * the Mongo distributed lock (data_provider.py:157-198) disappears:
   per-key serialized state updates give the same mutual exclusion;
-* debounce / age-out (job_culler.py:22,35) map to GroupState timeouts.
+* age-out (job_culler.py:35) maps to a GroupState timeout.
 
 The state value holds the accumulated trigger map as parallel arrays
 (upstreams, exec_uuids) — GroupState supports struct-of-simple-types best.
@@ -79,8 +79,9 @@ def _update_group(
     transition, with the partial trigger map as its state.
 
     ttl_ms is bound by fires_stream ONLY when the query runs with
-    ProcessingTimeTimeout (the resident control loop); bounded/NoTimeout
-    runs leave it None so no timeout is ever armed. Config errors surface
+    ProcessingTimeTimeout (an unbounded query); bounded/NoTimeout runs,
+    the dispatch drain among them, leave it None so no timeout is ever
+    armed. Config errors surface
     at query construction, never silently here (a swallowed failure would
     disable the ST5 age-out and let keyed state grow unbounded)."""
     (state_key,) = key
@@ -177,8 +178,8 @@ def fires_stream(
 ) -> DataFrame:
     """The control loop's stateful operator, built in one place: lifecycle
     events -> deliveries -> the keyed trigger fold, one output row per fire
-    (OUTPUT_SCHEMA). Every streaming consumer (memory sink, dispatch ledger,
-    checkpointed resume) starts from this frame.
+    (OUTPUT_SCHEMA). The dispatch ledger query (sinks.start_dispatch_query)
+    and its checkpointed resume start from this frame.
 
     ttl_ms=None runs with NoTimeout (bounded availableNow drains: with a
     processing-time timeout armed they keep scheduling state-cleanup
@@ -209,34 +210,3 @@ def fires_stream(
         outputMode="append",
         timeoutConf=timeout,
     )
-
-
-def start_incubation_query(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    sf_dir: str,
-    query_name: str = "incubation_fires",
-    bounded: bool = True,
-):
-    """Wire the streaming state machine to a memory sink — a real deployment
-    swaps the source for Kafka/Kinesis and the sink for a checkpointed
-    foreachBatch appending to the dispatch ledger.
-
-    bounded=True drains everything available with trigger(availableNow)
-    and NoTimeout, then terminates — the test/replay mode.
-    bounded=False is the resident control loop: processing-time trigger with
-    the age-out TTL armed."""
-    ttl_ms = None
-    if not bounded:
-        from ..config import load_config
-
-        # resolve the TTL on the driver, at query construction: a broken
-        # config fails the start() instead of silently disabling the age-out
-        ttl_ms = load_config().incubating_job_age_out_s * 1000
-    fires = fires_stream(spark, events_stream, sf_dir, ttl_ms=ttl_ms)
-    writer = fires.writeStream.outputMode("append").format("memory").queryName(query_name)
-    if bounded:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()

@@ -17,9 +17,11 @@ found (watermarks bound STATE, not emission), so on an in-order replay the
 streamed result equals the batch interval join exactly — pinned in
 tests/test_streaming_joins.py.
 
+The same join, on the batch frame, is the attribution step of the
+registered attribution queries (operators/events.py).
+
 Reference parity: the reference has no stream-correlation surface (its
-mq_poller is a single at-most-once queue); this is part of the engine's
-streaming extension family (COVERAGE.md "Streaming extras").
+mq_poller is a single at-most-once queue).
 """
 
 from __future__ import annotations
@@ -76,52 +78,3 @@ def attribution_join(events: DataFrame, window: str = ATTRIBUTION_WINDOW) -> Dat
         "purchase_ts",
         "purchase_value",
     )
-
-
-def attribution_join_outer(
-    events: DataFrame, window: str = ATTRIBUTION_WINDOW
-) -> DataFrame:
-    """LEFT OUTER stream-stream variant: every click emits, matched to its
-    in-window purchases or null-padded — the funnel's "no conversion"
-    detector. The emission semantics differ fundamentally from inner:
-    Spark can only declare a click unmatched once the WATERMARK has passed
-    the end of its attribution window (until then a matching purchase may
-    still arrive), so null-padded rows trail the data by watermark delay +
-    window. State stays watermark-bounded exactly like the inner join;
-    tests push a sentinel through to flush the tail and pin
-    streamed == batch left join."""
-    clicks, purchases = _sides(events)
-    if events.isStreaming:
-        clicks = clicks.withWatermark("click_ts", WATERMARK_DELAY)
-        purchases = purchases.withWatermark("purchase_ts", WATERMARK_DELAY)
-    return clicks.join(
-        purchases,
-        F.expr(
-            f"""
-            c_user = p_user
-            AND purchase_ts >= click_ts
-            AND purchase_ts <= click_ts + INTERVAL {window}
-            """
-        ),
-        "leftOuter",
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_value",
-    )
-
-
-def stream_static_enrichment(events_stream: DataFrame, defs: DataFrame) -> DataFrame:
-    """Stream-static equi-join (the third join mode, completing
-    stream-stream above and the foreachBatch folds in maintenance.py):
-    each lifecycle micro-batch is enriched with the pipeline catalog. The
-    static side is broadcast and RE-RESOLVED per micro-batch — a catalog
-    update is visible to the next batch without restarting the query — and
-    the join is stateless, so no watermark is involved. Left join: an
-    event for an unknown pipeline passes through with null dims (dropping
-    it would silently lose data on a catalog lag)."""
-    dims = defs.select("pipeline_uuid", "engine", "retry_max")
-    return events_stream.join(F.broadcast(dims), "pipeline_uuid", "left")

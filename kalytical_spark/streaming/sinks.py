@@ -76,48 +76,3 @@ def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
     # metadata probe look up a literal ".../batch_id=*" path and log a
     # FileNotFoundException WARN on every read
     return spark.read.option("basePath", ledger_dir).parquet(ledger_dir)
-
-
-def cron_origination_stream(
-    spark: SparkSession, ticks: DataFrame, sf_dir: str
-) -> DataFrame:
-    """ST12 streaming form: a clock-tick stream (rate source in production,
-    file-based ticks in tests) joined against the scheduled pipelines emits
-    origination events at each hourly boundary, deduped within the watermark
-    so replayed ticks cannot double-originate. Stable exec ids come from the
-    (pipeline, boundary) pair — the idempotence key."""
-    from .. import catalog
-
-    catalog.register(spark, sf_dir)
-    scheduled = F.broadcast(
-        spark.table("pipeline_defs")
-        .filter(F.col("schedule").isNotNull())
-        .select("pipeline_uuid", "schedule")
-    )
-    hours = (
-        # the watermark delay must cover the WHOLE span over which ticks
-        # for one boundary keep arriving (a full hour) — at 10 minutes the
-        # boundary's dedup state would be evicted mid-hour and later ticks
-        # of the same hour would re-originate it
-        ticks.withWatermark("tick_ts", "70 minutes")
-        .withColumn("boundary", F.date_trunc("hour", "tick_ts"))
-        .dropDuplicatesWithinWatermark(["boundary"])
-    )
-    return hours.crossJoin(scheduled).select(
-        "pipeline_uuid",
-        F.lit("origination").alias("event_subtype"),
-        F.col("boundary").alias("event_time"),
-        F.substring(
-            # TZ-independent idempotence key: hash the epoch seconds of the
-            # boundary, not its session-timezone string render
-            F.md5(
-                F.concat(
-                    F.col("pipeline_uuid"),
-                    F.lit("@"),
-                    F.unix_timestamp("boundary").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ).alias("exec_uuid"),
-    )

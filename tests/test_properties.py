@@ -152,17 +152,15 @@ _cron_token = st.lists(_cron_field, min_size=1, max_size=3).map(",".join)
 @settings(max_examples=60, deadline=None)
 @given(tok=_cron_token, val=st.integers(0, 59), first=st.integers(0, 1))
 def test_cron_field_python_equals_sql(spark, tok, val, first):
-    """The pure-Python field matcher (cron_preview UDTF) and the SQL
+    """The pure-Python field matcher (tests/cron_model.py) and the SQL
     compilation (_cron_field_match_sql) must agree on ANY grammar-legal
     token — fuzzed, not just the fixture schedules."""
-    from kalytical_spark.operators.scheduling import (
-        _cron_field_match_sql,
-        _py_cron_field_match,
-    )
+    from kalytical_spark.operators.scheduling import _cron_field_match_sql
+    from tests.cron_model import cron_field_match
 
     sql = _cron_field_match_sql(f"'{tok}'", str(val), duck=False, first=first)
     got_sql = spark.sql(f"SELECT {sql} AS ok").collect()[0].ok
-    assert got_sql == _py_cron_field_match(tok, val, first)
+    assert got_sql == cron_field_match(tok, val, first)
 
 
 _dow_field = st.one_of(
@@ -182,31 +180,29 @@ def test_cron_dow_alias_python_equals_sql(spark, tok, val):
     """dow mode (vixie 7==Sunday alias): Python twin vs SQL compilation on
     tokens that may spell Sunday as 7 — including ranges like '5-7' and
     mixed element lists like '*/3,7'."""
-    from kalytical_spark.operators.scheduling import (
-        _cron_field_match_sql,
-        _py_cron_field_match,
-    )
+    from kalytical_spark.operators.scheduling import _cron_field_match_sql
+    from tests.cron_model import cron_field_match
 
     sql = _cron_field_match_sql(f"'{tok}'", str(val), duck=False, first=0, dow=True)
     got_sql = spark.sql(f"SELECT {sql} AS ok").collect()[0].ok
-    assert got_sql == _py_cron_field_match(tok, val, 0, dow=True)
+    assert got_sql == cron_field_match(tok, val, 0, dow=True)
 
 
 def test_cron_dow_seven_is_sunday():
     """Pinned vixie cases: '7' and ranges reaching 7 admit Sunday (0);
     the alias must not widen star-step elements ('*/3' still excludes 2)."""
-    from kalytical_spark.operators.scheduling import _py_cron_field_match
+    from tests.cron_model import cron_field_match
 
-    assert _py_cron_field_match("7", 0, 0, dow=True)
-    assert _py_cron_field_match("5-7", 0, 0, dow=True)
-    assert _py_cron_field_match("5-7", 5, 0, dow=True)
-    assert _py_cron_field_match("5-7", 6, 0, dow=True)
-    assert not _py_cron_field_match("5-7", 4, 0, dow=True)
-    assert _py_cron_field_match("*/3,7", 0, 0, dow=True)
-    assert not _py_cron_field_match("*/3", 2, 0, dow=True)
-    assert _py_cron_field_match("*/3", 0, 0, dow=True)
+    assert cron_field_match("7", 0, 0, dow=True)
+    assert cron_field_match("5-7", 0, 0, dow=True)
+    assert cron_field_match("5-7", 5, 0, dow=True)
+    assert cron_field_match("5-7", 6, 0, dow=True)
+    assert not cron_field_match("5-7", 4, 0, dow=True)
+    assert cron_field_match("*/3,7", 0, 0, dow=True)
+    assert not cron_field_match("*/3", 2, 0, dow=True)
+    assert cron_field_match("*/3", 0, 0, dow=True)
     # without dow mode the alias must stay off (dom/month/minute fields)
-    assert not _py_cron_field_match("7", 0, 0)
+    assert not cron_field_match("7", 0, 0)
 
 
 # --- NTILE closed form vs Spark's ntile over random sizes -----------------

@@ -230,7 +230,10 @@ def test_fires_stream_age_out_ttl(spark, monkeypatch):
 @pytest.mark.slow
 def test_streaming_end_to_end_matches_replay(spark):
     """Full Structured Streaming run (file source -> applyInPandasWithState
-    -> memory sink) produces the same fire multiset as the batch replay."""
+    -> foreachBatch dispatch ledger) produces the same fire multiset as the
+    batch replay."""
+    from kalytical_spark.streaming import sinks
+
     catalog.register(spark, SF_SMALL)
     events = spark.table("lifecycle_events")
     with tempfile.TemporaryDirectory() as tmp:
@@ -238,14 +241,19 @@ def test_streaming_end_to_end_matches_replay(spark):
         events.coalesce(1).write.parquet(src)
         schema = events.schema
         stream = spark.readStream.schema(schema).parquet(src)
-        q = incubation.start_incubation_query(spark, stream, SF_SMALL, "fires_e2e")
+        ledger_dir = os.path.join(tmp, "ledger")
+        q = sinks.start_dispatch_query(
+            spark, stream, SF_SMALL,
+            ledger_dir=ledger_dir,
+            checkpoint_dir=os.path.join(tmp, "ckpt"),
+        )
         try:
             assert q.awaitTermination(120), "bounded streaming run did not finish"
         finally:
             q.stop()
         got = {
             (r.pipeline_uuid, r.fired_at, r.sources)
-            for r in spark.sql("SELECT * FROM fires_e2e").collect()
+            for r in sinks.read_ledger(spark, ledger_dir).collect()
         }
     want = {
         (r.pipeline_uuid, r.fired_at, r.sources)
@@ -343,29 +351,25 @@ def test_dispatch_drain_scans_the_source_once(spark):
 
 
 def test_ledger_batch_id_is_the_partition_only(spark, tmp_path):
-    """Both batch ledgers keep batch_id in the batch_id=<n> directory only:
-    a part file has no batch_id column of its own (a duplicate makes every
-    read warn COLUMN_ALREADY_EXISTS), and the reader gets an int back."""
+    """The dispatch ledger keeps batch_id in the batch_id=<n> directory
+    only: a part file has no batch_id column of its own (a duplicate makes
+    every read warn COLUMN_ALREADY_EXISTS), and the reader gets an int
+    back."""
     import pyarrow.parquet as pq
 
-    from kalytical_spark.streaming import culler, sinks
+    from kalytical_spark.streaming import sinks
 
     fires = spark.createDataFrame(
         [("p-a", datetime(2024, 1, 1), "any", 1, "u1=e1")],
         incubation.OUTPUT_SCHEMA,
     )
-    dispatch, cull = tmp_path / "dispatch", tmp_path / "cull"
-    sinks.dispatch_ledger_sink(str(dispatch))(fires, 3)
-    culler.culler_sink(spark, SF_SMALL, str(cull))(spark.range(1), 5)
-    for ledger_dir, batch_id, read in (
-        (dispatch, 3, sinks.read_ledger),
-        (cull, 5, culler.read_culler_ledger),
-    ):
-        part = next((ledger_dir / f"batch_id={batch_id}").glob("*.parquet"))
-        assert "batch_id" not in pq.read_schema(part).names
-        ledger = read(spark, str(ledger_dir))
-        assert dict(ledger.dtypes)["batch_id"] == "int"
-        assert {r.batch_id for r in ledger.collect()} == {batch_id}
+    ledger_dir = tmp_path / "dispatch"
+    sinks.dispatch_ledger_sink(str(ledger_dir))(fires, 3)
+    part = next((ledger_dir / "batch_id=3").glob("*.parquet"))
+    assert "batch_id" not in pq.read_schema(part).names
+    ledger = sinks.read_ledger(spark, str(ledger_dir))
+    assert dict(ledger.dtypes)["batch_id"] == "int"
+    assert {r.batch_id for r in ledger.collect()} == {3}
 
 
 @pytest.mark.slow
@@ -394,39 +398,3 @@ def test_foreachbatch_dispatch_ledger(spark):
     assert len(ledger) == want
     assert len({r.tracking_id for r in ledger}) == len(ledger)
     assert all(r.batch_id is not None for r in ledger)
-
-
-def test_cron_origination_stream(spark):
-    """Hourly tick stream (with replayed ticks) originates each scheduled
-    pipeline exactly once per hour boundary with stable exec ids."""
-    from kalytical_spark.streaming import sinks
-
-    catalog.register(spark, SF_SMALL)
-    n_scheduled = (
-        spark.table("pipeline_defs").filter(F.col("schedule").isNotNull()).count()
-    )
-    ticks = spark.createDataFrame(
-        [("2024-01-01 10:00:05",), ("2024-01-01 10:30:00",),  # same hour twice
-         ("2024-01-01 11:00:01",)],
-        "tick_ts string",
-    ).select(F.col("tick_ts").cast("timestamp").alias("tick_ts"))
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "ticks")
-        ticks.coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema("tick_ts timestamp").parquet(src)
-        q = (
-            sinks.cron_origination_stream(spark, stream, SF_SMALL)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("cron_e2e")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            assert q.awaitTermination(120)
-        finally:
-            q.stop()
-        rows = spark.sql("SELECT * FROM cron_e2e").collect()
-    assert len(rows) == 2 * n_scheduled  # two distinct hour boundaries
-    assert len({(r.pipeline_uuid, r.event_time) for r in rows}) == len(rows)
-    assert all(len(r.exec_uuid) == 8 for r in rows)

@@ -75,97 +75,3 @@ def test_stream_stream_join_state_is_watermark_bounded(spark):
     op = last["stateOperators"][0]
     assert op["operatorName"] == "symmetricHashJoin", op
     assert "watermark" in str(last["eventTime"]) or last["eventTime"], last
-
-
-def test_stream_static_join_matches_batch(spark):
-    from pyspark.sql import functions as F
-
-    catalog.register(spark, SF_SMALL)
-    ev = spark.table("lifecycle_events").select(
-        "pipeline_uuid", "exec_uuid", "event_subtype"
-    )
-    defs = spark.table("pipeline_defs")
-    batch = {
-        tuple(r)
-        for r in joins.stream_static_enrichment(ev, defs).collect()
-    }
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "lifecycle")
-        ev.repartition(3).write.parquet(src)
-        stream = spark.readStream.schema(ev.schema).parquet(src)
-        q = (
-            joins.stream_static_enrichment(stream, defs)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("enrich_e2e")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            assert q.awaitTermination(120)
-        finally:
-            q.stop()
-        got = {
-            tuple(r) for r in spark.sql("SELECT * FROM enrich_e2e").collect()
-        }
-    assert got == batch and batch
-    # left-join semantics: every stream row survives
-    assert len(spark.sql("SELECT * FROM enrich_e2e").collect()) == ev.count()
-
-
-def test_stream_stream_left_outer_join_matches_batch(spark):
-    """LEFT OUTER stream-stream: unmatched clicks null-pad only after the
-    watermark passes their window's end, so the feed carries a far-future
-    sentinel click in a SECOND micro-batch to advance the watermark and
-    flush the tail. Streamed result (sentinel excluded — its own window
-    never closes) == batch left join."""
-    import pyspark.sql.functions as F
-
-    catalog.register(spark, SF_SMALL)
-    ev = spark.table("events_ms").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    sentinel = ev.limit(1).select(
-        F.lit(10**9).alias("event_id"),
-        (F.max("ts") + F.expr("INTERVAL 365 DAYS")).alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit("click").alias("event_type"),
-        F.lit(0.0).alias("value"),
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "events")
-        ev.coalesce(1).write.parquet(src)
-        # second file = second micro-batch: the sentinel's event time
-        # advances the watermark past every real click's window
-        sentinel.coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            joins.attribution_join_outer(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("attr_outer_e2e")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            assert q.awaitTermination(180)
-        finally:
-            q.stop()
-        got = sorted(
-            (r.click_id, r.purchase_id)
-            for r in spark.sql(
-                "SELECT * FROM attr_outer_e2e WHERE user_id != -1"
-            ).collect()
-        )
-    batch = sorted(
-        (r.click_id, r.purchase_id)
-        for r in joins.attribution_join_outer(ev).collect()
-    )
-    matched = [p for _, p in batch if p is not None]
-    unmatched = [p for _, p in batch if p is None]
-    assert matched and unmatched, "need both matched and null-padded rows"
-    assert got == batch
