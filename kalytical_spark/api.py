@@ -12,9 +12,13 @@ rebuilt after every re-registration: one row per pipeline (1,000 at sf0.1)
 and one row per incubating run (20,000 at sf0.1). Catalyst folds their
 filters and projections on the driver, so a warm call launches no Spark job.
 run_single_use mints its sequence number from the engine's own submission
-count, also without a job. event_history and running_pipelines still run
-one job each: the sort behind their top-N runs as a job whether or not its
-input is resident.
+count, also without a job. event_history and running_pipelines are lookups
+in catalog's pipeline-keyed Arrow indexes of `lifecycle_events` and
+`running_jobs` (100,000 and 33,334 rows, 8.1 and 3.0 MB at sf0.1), built
+once on the first top-N read after each registration and rebuilt after
+every re-registration: a call slices one pipeline's rows, filters them with
+pyarrow.compute and returns the head as a LocalRelation frame, so it too
+launches no Spark job.
 
 Auth (Okta JWT, auth/auth.py) is deliberately a no-op shim here — outside
 the analytics engine's scope (SURVEY.md section 2.10 note).
@@ -24,6 +28,8 @@ from __future__ import annotations
 
 import re
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -116,24 +122,29 @@ def event_history(
     cfg: KalyticalSparkConfig | None = None,
 ) -> DataFrame:
     """GET /pipeline/dispatcher/event/history — F6+F7 -> O1 with the
-    reference's defaults (facade.py:107); 'now' is the deterministic data
-    clock."""
+    reference's defaults (facade.py:107): the newest `max_records` events
+    received within `since_seconds` of 'now', newest first (ties by
+    exec_uuid DESC). 'now' is the deterministic data clock, the newest
+    events_ms.ts: lifecycle_events has one row per events_ms row, with
+    event_time = ts, so it is the index's newest event_time. The cut-off
+    is computed on the index's UTC micros, never through a naive Python
+    datetime, whose meaning depends on the process time zone."""
     cfg = cfg or load_config()
-    ev = catalog.table(spark, sf_dir, "lifecycle_events")
-    from .operators.common import now_expr
-
-    now = now_expr(spark, sf_dir)
     since = since_seconds if since_seconds is not None else cfg.history_lookback_s
     limit = max_records if max_records is not None else cfg.history_max_records
-    out = ev.filter(
-        F.col("received_time") >= now - F.expr(f"INTERVAL {int(since)} SECONDS")
-    )
     if pipeline_uuid is not None:
         _check(_UUID_RE, pipeline_uuid, "pipeline_uuid")
-        out = out.filter(F.col("pipeline_uuid") == pipeline_uuid)
-    if event_subtype is not None:
-        out = out.filter(F.col("event_subtype") == event_subtype)
-    return out.orderBy(F.desc("received_time"), F.desc("exec_uuid")).limit(limit)
+    ev = catalog.index(spark, sf_dir, "lifecycle_events")
+    now = pc.max(ev.rows.column("event_time"))
+    cutoff = pc.subtract(now, pa.scalar(int(since) * 1_000_000, pa.duration("us")))
+
+    def where(rows: pa.Table):
+        keep = pc.greater_equal(rows.column("received_time"), cutoff)
+        if event_subtype is not None:
+            keep = pc.and_(keep, pc.equal(rows.column("event_subtype"), event_subtype))
+        return keep
+
+    return ev.top(spark, pipeline_uuid, where, limit)
 
 
 def running_pipelines(
@@ -145,23 +156,29 @@ def running_pipelines(
     limit: int | None = None,
     cfg: KalyticalSparkConfig | None = None,
 ) -> DataFrame:
-    """GET /pipeline/dispatcher/running — F9+F10 -> O3; filters are Catalyst
-    predicates, not the reference's list-then-filter-in-Python
-    (engine.py:53 TODO). Defaults mirror the reference contract
-    (facade.py:86-88): status ['running', 'waiting', 'pending'] and an
-    optional engine_name filter."""
+    """GET /pipeline/dispatcher/running — F9+F10 -> O3: the newest `limit`
+    jobs (default the page size) whose engine_status is in `status`,
+    newest start_time first (ties by exec_uuid DESC). The filters run over
+    one pipeline's rows of the running_jobs index, not the reference's
+    list-then-filter-in-Python (engine.py:53 TODO). Defaults mirror the
+    reference contract (facade.py:86-88): status ['running', 'waiting',
+    'pending'] and an optional engine_name filter."""
     cfg = cfg or load_config()
-    jobs = catalog.table(spark, sf_dir, "running_jobs")
-    out = jobs.filter(F.col("engine_status").isin(*status))
     if pipeline_uuid is not None:
         _check(_UUID_RE, pipeline_uuid, "pipeline_uuid")
-        out = out.filter(F.col("pipeline_uuid") == pipeline_uuid)
-    if engine_name is not None:
-        out = out.filter(F.col("engine") == engine_name)
+    jobs = catalog.index(spark, sf_dir, "running_jobs")
+    wanted = pa.array(list(status), pa.string())
+
+    def where(rows: pa.Table):
+        keep = pc.is_in(rows.column("engine_status"), value_set=wanted)
+        if engine_name is not None:
+            keep = pc.and_(keep, pc.equal(rows.column("engine"), engine_name))
+        return keep
+
     # explicit limit=0 means "no rows" (an existence/pagination edge);
     # `limit or page_size` would silently promote it to a full page
-    return out.orderBy(F.desc("start_time"), F.desc("exec_uuid")).limit(
-        limit if limit is not None else cfg.running_jobs_page_size
+    return jobs.top(
+        spark, pipeline_uuid, where, limit if limit is not None else cfg.running_jobs_page_size
     )
 
 

@@ -1,6 +1,9 @@
-"""Execution-engine abstraction (SURVEY.md UD1/UD3/UD4): the reference's
-pluggable engine factory (engine.py:21-36) and retry decorator
-(utils/retry.py:7-18) re-expressed for the Spark engine. Submission becomes
+"""Execution-engine abstraction (SURVEY.md UD1/UD4): the reference's
+pluggable engine factory (engine.py:21-36) re-expressed for the Spark
+engine. The reference's driver-side retry decorator (UD3,
+utils/retry.py:7-18) has no counterpart: no workload, endpoint or
+registered query wrapped anything in it, and executor-side retries are
+Spark's own spark.task.maxFailures. Submission becomes
 a decision-row append to a dispatch ledger DataFrame — the within-engine
 analog of pod creation; a real deployment's foreachBatch sink would hand
 these rows to spark-submit/K8s.
@@ -8,8 +11,6 @@ these rows to spark-submit/K8s.
 
 from __future__ import annotations
 
-import functools
-import time
 from collections import Counter
 from dataclasses import dataclass
 
@@ -23,32 +24,6 @@ class EngineNotImplementedError(NotImplementedError):
 class JobNotFoundError(KeyError):
     """Abort target unknown to the engine — the reference's 404 when the pod
     is already gone (engine.py:162-169)."""
-
-
-def retry(attempts: int = 3, delay_s: float = 0.0):
-    """Driver-side operation retry (utils/retry.py:7-18; the reference has
-    no backoff — we add an optional linear delay). Executor-side retries are
-    Spark's own spark.task.maxFailures."""
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapper(*args, **kwargs):
-            last: Exception | None = None
-            n = max(1, attempts)
-            for i in range(n):
-                try:
-                    return fn(*args, **kwargs)
-                except Exception as exc:  # noqa: BLE001 - mirror reference semantics
-                    last = exc
-                    # no sleep after the FINAL attempt: nothing follows it,
-                    # so the pause would only delay the re-raise
-                    if delay_s and i < n - 1:
-                        time.sleep(delay_s * (i + 1))
-            raise last  # type: ignore[misc]
-
-        return wrapper
-
-    return deco
 
 
 @dataclass(frozen=True)

@@ -165,13 +165,14 @@ def materialize_session_caches(spark: SparkSession) -> None:
             _count(v)
 
 
-# catalog's registration guard, cache list and resident-view marks are
+# catalog's registration guard, cache list and driver-side builds are
 # session memos too (the registration lives HERE because catalog is
 # imported above — a session_memo import from catalog.py would be
 # circular): if the guard survived a reset, domain views would stay
 # registered-but-uncached, a shape neither a fresh nor a warm session ever
-# has. Clearing the marks makes the next read of each of
-# catalog.RESIDENT_VIEWS rebuild its LocalRelation copy.
+# has. Clearing the builds makes the next read of each of
+# catalog.RESIDENT_VIEWS rebuild its LocalRelation copy, and of each of
+# catalog.INDEXED_VIEWS its PipelineIndex.
 SESSION_MEMOS.append(catalog._CURRENT_SF)
 SESSION_MEMOS.append(catalog._CACHED_DFS)
 SESSION_MEMOS.append(catalog._RESIDENT)

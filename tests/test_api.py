@@ -1,5 +1,5 @@
 """Facade-layer tests: the section-2.10 endpoint surface, input validation,
-engine registry, retry decorator, and the settings report."""
+engine registry, and the settings report."""
 
 from __future__ import annotations
 
@@ -72,6 +72,128 @@ def test_event_history_defaults_and_filters(spark):
     assert only_fail and all(r.event_subtype == "failure" for r in only_fail)
 
 
+def _spark_event_history(spark, sf, pipeline_uuid, event_subtype, since, limit):
+    """event_history as a Spark top-N plan, the formulation the index
+    replaced: the reference the index is checked against."""
+    from kalytical_spark.operators.common import now_expr
+
+    ev = catalog.table(spark, sf, "lifecycle_events")
+    now = now_expr(spark, sf)
+    out = ev.filter(F.col("received_time") >= now - F.expr(f"INTERVAL {int(since)} SECONDS"))
+    if pipeline_uuid is not None:
+        out = out.filter(F.col("pipeline_uuid") == pipeline_uuid)
+    if event_subtype is not None:
+        out = out.filter(F.col("event_subtype") == event_subtype)
+    return out.orderBy(F.desc("received_time"), F.desc("exec_uuid")).limit(limit)
+
+
+def _spark_running_pipelines(spark, sf, pipeline_uuid, status, engine_name, limit):
+    """running_pipelines as a Spark top-N plan: the reference."""
+    out = catalog.table(spark, sf, "running_jobs").filter(F.col("engine_status").isin(*status))
+    if pipeline_uuid is not None:
+        out = out.filter(F.col("pipeline_uuid") == pipeline_uuid)
+    if engine_name is not None:
+        out = out.filter(F.col("engine") == engine_name)
+    return out.orderBy(F.desc("start_time"), F.desc("exec_uuid")).limit(limit)
+
+
+def _index_cases(spark, n_rows, *axes):
+    """Every pipeline crossed with each value of the first axis; the other
+    axes and the limit (0, 1, the default, above the row count) rotate
+    over those pairs, so each value of each axis meets many pipelines. No
+    pipeline (None, the global-order path) meets every combination.
+    Yields (pipeline_uuid, first, *others, limit); a limit of None stands
+    for the endpoint's default."""
+    import itertools
+
+    pipelines = [None] + sorted(r.pipeline_uuid for r in spark.table("pipeline_defs").collect())
+    rotating = list(itertools.product(*axes[1:], (0, 1, None, n_rows + 1)))
+    for k, (p, first) in enumerate(itertools.product(pipelines, axes[0])):
+        for rest in rotating if p is None else [rotating[k % len(rotating)]]:
+            yield (p, first, *rest)
+
+
+@pytest.mark.parametrize("sf", [SF_SMALL, SF_ORACLE])
+def test_event_history_index_matches_spark_top_n(spark, sf):
+    """For every pipeline (and None), every subtype (and None), several
+    lookbacks and limits, event_history's index lookup returns the Spark
+    top-N plan's rows, in its order. The expected rows of a case are the
+    Spark plan's rows for its lookback, filtered to the case's pipeline and
+    subtype and cut at its limit; every 25th case also runs the Spark plan
+    with the case's own arguments."""
+    catalog.register(spark, sf)
+    schema = spark.table("lifecycle_events").schema
+    subtypes = (None, "success", "running", "failure", "origination", "submitted")
+    lookbacks = (0, 3600, 3 * 86400, 40 * 86400)
+    n_rows = spark.table("lifecycle_events").count()
+    everything = {
+        since: [tuple(r) for r in _spark_event_history(spark, sf, None, None, since, n_rows).collect()]
+        for since in lookbacks
+    }
+    assert everything[0] and len(everything[3 * 86400]) < len(everything[40 * 86400]) == n_rows
+    for k, (p, sub, since, limit) in enumerate(_index_cases(spark, n_rows, subtypes, lookbacks)):
+        df = api.event_history(spark, sf, p, sub, since, limit)
+        assert df.schema == schema
+        got = [tuple(r) for r in df.collect()]
+        n = 20 if limit is None else limit
+        want = [r for r in everything[since] if p in (None, r[2]) and sub in (None, r[1])][:n]
+        assert got == want, (p, sub, since, limit)
+        if k % 25 == 0:
+            ref = _spark_event_history(spark, sf, p, sub, since, n).collect()
+            assert want == [tuple(r) for r in ref], (p, sub, since, limit)
+
+
+@pytest.mark.parametrize("sf", [SF_SMALL, SF_ORACLE])
+def test_running_pipelines_index_matches_spark_top_n(spark, sf):
+    """For every pipeline (and None), each engine (and None), the default
+    and a custom status set and several limits, running_pipelines' index
+    lookup returns the Spark top-N plan's rows, in its order (expected
+    rows derived as in the event_history test)."""
+    catalog.register(spark, sf)
+    schema = spark.table("running_jobs").schema
+    default = ("running", "waiting", "pending")
+    statuses = (default, ("success", "timed_out"))
+    n_rows = spark.table("running_jobs").count()
+    everything = {
+        st: [tuple(r) for r in _spark_running_pipelines(spark, sf, None, st, None, n_rows).collect()]
+        for st in statuses
+    }
+    assert all(everything.values())
+    cases = _index_cases(spark, n_rows, (None, "K8sJobEngine", "LocalEngine"), statuses)
+    for k, (p, engine, st, limit) in enumerate(cases):
+        if st == default:
+            df = api.running_pipelines(spark, sf, p, engine_name=engine, limit=limit)
+        else:
+            df = api.running_pipelines(spark, sf, p, st, engine, limit)
+        assert df.schema == schema
+        got = [tuple(r) for r in df.collect()]
+        n = 10 if limit is None else limit
+        want = [r for r in everything[st] if p in (None, r[0]) and engine in (None, r[2])][:n]
+        assert got == want, (p, engine, st, limit)
+        if k % 25 == 0:
+            ref = _spark_running_pipelines(spark, sf, p, st, engine, n).collect()
+            assert want == [tuple(r) for r in ref], (p, engine, st, limit)
+
+
+def test_event_history_cutoff_ignores_process_time_zone(spark, monkeypatch):
+    """The since cut-off is taken on the index's UTC micros, so one call
+    picks the same events whatever the Python process's time zone (a naive
+    datetime 'now' would move the cut-off by the zone's offset)."""
+    import time
+
+    picked = []
+    try:
+        for zone in ("Pacific/Auckland", "America/Los_Angeles"):
+            monkeypatch.setenv("TZ", zone)
+            time.tzset()
+            rows = api.event_history(spark, SF_SMALL, since_seconds=6 * 3600, max_records=1000)
+            picked.append([r.exec_uuid for r in rows.collect()])
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert picked[0] and picked[0] == picked[1]
+
+
 def test_running_pipelines_paging(spark):
     rows = api.running_pipelines(spark, SF_SMALL).collect()
     assert 0 < len(rows) <= 10
@@ -107,27 +229,6 @@ def test_engine_registry_and_submission():
         dispatch.engine_factory("K8sPodEngine")
     eng = dispatch.engine_factory("LocalLedgerEngine")
     assert isinstance(eng, dispatch.LocalLedgerEngine)
-
-
-def test_retry_decorator():
-    calls = {"n": 0}
-
-    @dispatch.retry(attempts=3)
-    def flaky():
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise RuntimeError("boom")
-        return "ok"
-
-    assert flaky() == "ok"
-    assert calls["n"] == 3
-
-    @dispatch.retry(attempts=2)
-    def always_fails():
-        raise RuntimeError("nope")
-
-    with pytest.raises(RuntimeError):
-        always_fails()
 
 
 def test_sys_config_roundtrip():
@@ -215,11 +316,14 @@ def _jobs_in_group(spark, group: str, action) -> int:
 
 def test_catalog_reads_and_single_use_launch_no_spark_job(spark):
     """After one warm read, the pipeline-catalog endpoints, the delete
-    guard and incubation_state are answered from the driver-resident views
-    and run_single_use mints its id from the engine's own count: none of
+    guard and incubation_state are answered from the driver-resident views,
+    event_history and running_pipelines from the Arrow indexes, and
+    run_single_use mints its id from the engine's own count: none of
     them launches a Spark job."""
     api.describe_pipeline(spark, SF_SMALL, "p-3").collect()
     api.incubation_state(spark, SF_SMALL).collect()
+    api.event_history(spark, SF_SMALL, "p-3").collect()
+    api.running_pipelines(spark, SF_SMALL).collect()
     eng = dispatch.engine_factory("LocalLedgerEngine")
     calls = {
         "describe": lambda: api.describe_pipeline(spark, SF_SMALL, "p-3").collect(),
@@ -230,6 +334,10 @@ def test_catalog_reads_and_single_use_launch_no_spark_job(spark):
         "body": lambda: api.fetch_pipeline_body(spark, SF_SMALL, "p-3").collect(),
         "guard": lambda: api.delete_guard(spark, SF_SMALL, "p-4").collect(),
         "incubation": lambda: api.incubation_state(spark, SF_SMALL).collect(),
+        "history": lambda: api.event_history(
+            spark, SF_SMALL, "p-3", event_subtype="failure", since_seconds=30 * 86400
+        ).collect(),
+        "running": lambda: api.running_pipelines(spark, SF_SMALL, engine_name="LocalEngine").collect(),
         "single_use": lambda: api.run_single_use(
             spark, {"pipeline_uuid": "p-3", "pipeline_body": "{}"}, engine=eng
         ),

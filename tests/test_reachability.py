@@ -2,8 +2,9 @@
 point, so a side surface that only its own tests import cannot grow back.
 
 The walk is static (``ast``, no Spark session). It starts from the driver
-contract, the facade, the control loop's sink, the benchmark and the tools,
-follows every import statement (lazy imports inside functions included) and
+contract, the facade, the control loop's sink, the benchmark and the tools
+(their test_*.py modules excepted, as in the name-level pass), follows every
+import statement (lazy imports inside functions included) and
 the operator modules that ``registry._load_optional`` loads by name.
 
 A second, name-level pass does the same for functions: every top-level def
@@ -31,15 +32,6 @@ _ROOT_MODULES = (
     "kalytical_spark.operators.dag",
 )
 _ROOT_DIRS = ("perfbench", "tools")
-
-# Top-level defs only their own tests call, kept for now: deleting them
-# with their tests is the next step of ROADMAP direction 3.
-_TEST_ONLY_FOR_NOW = (
-    # the driver-side retry decorator (SURVEY UD3); no workload, endpoint
-    # or registered query wraps anything in it
-    "kalytical_spark/dispatch.py:retry",
-)
-
 
 def _package_modules() -> dict[str, str]:
     """Dotted module name -> file path for every .py under the package."""
@@ -96,7 +88,7 @@ def _reached() -> set[str]:
     roots.append(("__spark_entry__", os.path.join(_REPO, "__spark_entry__.py")))
     for d in _ROOT_DIRS:
         for f in sorted(os.listdir(os.path.join(_REPO, d))):
-            if f.endswith(".py"):
+            if f.endswith(".py") and not f.startswith("test_"):
                 roots.append((f"{d}.{f[:-3]}", os.path.join(_REPO, d, f)))
     seen: set[str] = set()
     todo = [m for m, _ in roots if m in mods] + sorted(_string_loaded_operators())
@@ -192,8 +184,5 @@ def test_every_package_def_is_named():
             if own:  # a def naming itself (recursion) does not count
                 names = [n for n in names if n != node.name]
             used.update(names)
-    unnamed = {f"{rel}:{name}" for rel, name in defs if name not in used}
-    kept = set(_TEST_ONLY_FOR_NOW)
-    assert kept <= unnamed, f"stale exceptions: {sorted(kept - unnamed)}"
-    unnamed = sorted(unnamed - kept)
+    unnamed = sorted(f"{rel}:{name}" for rel, name in defs if name not in used)
     assert not unnamed, f"top-level defs nothing names: {unnamed}"
