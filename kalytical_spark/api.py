@@ -119,7 +119,6 @@ def event_history(
     event_subtype: str | None = None,
     since_seconds: int | None = None,
     max_records: int | None = None,
-    cfg: KalyticalSparkConfig | None = None,
 ) -> DataFrame:
     """GET /pipeline/dispatcher/event/history — F6+F7 -> O1 with the
     reference's defaults (facade.py:107): the newest `max_records` events
@@ -129,7 +128,7 @@ def event_history(
     event_time = ts, so it is the index's newest event_time. The cut-off
     is computed on the index's UTC micros, never through a naive Python
     datetime, whose meaning depends on the process time zone."""
-    cfg = cfg or load_config()
+    cfg = load_config()
     since = since_seconds if since_seconds is not None else cfg.history_lookback_s
     limit = max_records if max_records is not None else cfg.history_max_records
     if pipeline_uuid is not None:
@@ -154,7 +153,6 @@ def running_pipelines(
     status: tuple[str, ...] = ("running", "waiting", "pending"),
     engine_name: str | None = None,
     limit: int | None = None,
-    cfg: KalyticalSparkConfig | None = None,
 ) -> DataFrame:
     """GET /pipeline/dispatcher/running — F9+F10 -> O3: the newest `limit`
     jobs (default the page size) whose engine_status is in `status`,
@@ -163,7 +161,7 @@ def running_pipelines(
     list-then-filter-in-Python (engine.py:53 TODO). Defaults mirror the
     reference contract (facade.py:86-88): status ['running', 'waiting',
     'pending'] and an optional engine_name filter."""
-    cfg = cfg or load_config()
+    cfg = load_config()
     if pipeline_uuid is not None:
         _check(_UUID_RE, pipeline_uuid, "pipeline_uuid")
     jobs = catalog.index(spark, sf_dir, "running_jobs")

@@ -90,7 +90,7 @@ def _session_id(spark: SparkSession) -> tuple[str, int]:
     return (spark.sparkContext.applicationId, spark._jsparkSession.hashCode())
 
 
-def register(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, cache_domain: bool = True) -> None:
+def register(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register base parquet tables and derived domain views as temp views."""
     sid = _session_id(spark)
     if _CURRENT_SF.get(sid) == sf_dir:
@@ -127,7 +127,7 @@ def register(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, cache_domain: bo
     cached: list[DataFrame] = []
     for name in domain.DOMAIN_TABLES:
         df = spark.sql(domain.domain_select(name))
-        if cache_domain and name != "sup_n":
+        if name != "sup_n":
             df = df.cache()
             cached.append(df)
         df.createOrReplaceTempView(name)

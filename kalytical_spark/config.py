@@ -27,10 +27,6 @@ class KalyticalSparkConfig:
     """Operational knobs mirroring the reference's config attributes (values
     the reference leaves unset get deliberate defaults here)."""
 
-    # incubation age-out (job_culler.py:35)
-    incubating_job_age_out_s: int = field(
-        default_factory=lambda: _env_int("KALYTICAL_AGE_OUT_S", 20 * 86400)
-    )
     # paging defaults (facade.py:86,107)
     running_jobs_page_size: int = field(
         default_factory=lambda: _env_int("KALYTICAL_RUNNING_PAGE", 10)

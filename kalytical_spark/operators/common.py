@@ -84,11 +84,10 @@ def reset_session_state(spark: SparkSession) -> None:
 
 
 def _unpersist_value(v) -> None:
+    """Unpersist a memo value: a DataFrame, or the frames of a tuple or list
+    (None and other values hold no cache)."""
     if isinstance(v, DataFrame):
-        try:
-            v.unpersist()
-        except Exception:
-            pass
+        v.unpersist()
     elif isinstance(v, (tuple, list)):
         for item in v:
             _unpersist_value(item)
@@ -150,10 +149,7 @@ def materialize_session_caches(spark: SparkSession) -> None:
 
     def _count(v) -> None:
         if isinstance(v, DataFrame):
-            try:
-                v.count()
-            except Exception:
-                pass
+            v.count()
         elif isinstance(v, (tuple, list)):
             for item in v:
                 _count(item)

@@ -5,10 +5,10 @@ fired, when, and with which upstream sources — plus the retry ledger.
 
 Execution shape: the event->downstream delivery mapping is a broadcast hash
 join (parallel over the unbounded event side); the per-pipeline fold runs as
-applyInPandas grouped by downstream pipeline, each group sorted by
-(event_time, exec_uuid) for a total order. State transitions are the shared
-pure functions in streaming/transitions.py — the streaming layer executes
-the identical logic incrementally.
+applyInPandas grouped by downstream pipeline. The fold is
+streaming/transitions.fold, which sorts each group by (event_time,
+exec_uuid) for a total order — the streaming layer runs the same function
+incrementally, one micro-batch at a time.
 
 The sequential trigger-map fold (resets included) IS value-oracle-proven:
 ORACLE_REPLAY_DECISIONS re-derives it in DuckDB as a recursive CTE that
@@ -25,23 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..streaming.transitions import (
-    TriggerState,
-    apply_delivery,
-    is_simple_delivery,
-    sources_repr,
-)
+from ..streaming.transitions import OUTPUT_SCHEMA, fold, is_simple_delivery
 from .common import app_key, eager_cache, session_memo, t
 
+# the fire columns with the per-pipeline sequence number after the key
 _DECISION_SCHEMA = T.StructType(
-    [
-        T.StructField("pipeline_uuid", T.StringType()),
-        T.StructField("seq", T.IntegerType()),
-        T.StructField("fired_at", T.TimestampType()),
-        T.StructField("trigger_operator", T.StringType()),
-        T.StructField("n_deps", T.IntegerType()),
-        T.StructField("sources", T.StringType()),
-    ]
+    OUTPUT_SCHEMA.fields[:1] + [T.StructField("seq", T.IntegerType())] + OUTPUT_SCHEMA.fields[1:]
 )
 
 
@@ -58,29 +47,9 @@ def _deliveries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values(["event_time", "exec_uuid"], kind="mergesort")
-    first = pdf.iloc[0]
-    state = TriggerState(operator=first["trigger_operator"], n_deps=int(first["n_deps"]))
-    out = []
-    seq = 0
-    for row in pdf.itertuples(index=False):
-        fire = apply_delivery(state, row.upstream_uuid, row.exec_uuid, row.event_time)
-        if fire is not None:
-            seq += 1
-            out.append(
-                {
-                    "pipeline_uuid": row.pipeline_uuid,
-                    "seq": seq,
-                    "fired_at": fire.event_time,
-                    "trigger_operator": state.operator,
-                    "n_deps": state.n_deps,
-                    "sources": sources_repr(fire.sources),
-                }
-            )
-    return pd.DataFrame(
-        out,
-        columns=[f.name for f in _DECISION_SCHEMA.fields],
-    )
+    fires, _ = fold(pdf["pipeline_uuid"].iloc[0], pdf, {})
+    fires.insert(1, "seq", range(1, len(fires) + 1))
+    return fires
 
 
 # per-(session, sf) cache: the summary and downstream consumers reuse the

@@ -13,100 +13,37 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from . import domain
-from .operators import dag, events, metadata, relational, runs
+from .operators import (
+    adherence, ann_verify, asof, attribution, audio, basket, bitmaps,
+    bloomjoin, bpe, colbert, components, corpusdiag, curation, dag,
+    decision_support, dedup, dedup_incremental, drift, dsir, embedding_stats,
+    embgraph, events, features, filtering, fuzzy, graph, image, incremental,
+    ivf_incremental, journeys, kmeans_ivf, linkage, lm, maxscore, metadata,
+    mix, multimodal, mutations, olap, packing, pairscore, perceptron, pq,
+    preference, preprocess, quality, quantiles, rangejoin, ranking, relational,
+    replay, runs, sampling, scheduling, scrub, segments, setsim, simeval,
+    simhash, similarity, sketches, skew, skyline, spans, stats, subqueries,
+    text, timeseries, video, warehouse, weaklabel, weighted, zonemap,
+)
 
-_MODULES = [metadata, events, dag, runs, relational]
-
-
-def _load_optional():
-    import sys
-
-    mods = []
-    for name in (
-        "text",
-        "dedup",
-        "similarity",
-        "multimodal",
-        "replay",
-        "mutations",
-        "scheduling",
-        "simhash",
-        "subqueries",
-        "graph",
-        "asof",
-        "curation",
-        "ranking",
-        "components",
-        "preprocess",
-        "scrub",
-        "quality",
-        "kmeans_ivf",
-        "pq",
-        "timeseries",
-        "incremental",
-        "sampling",
-        "decision_support",
-        "warehouse",
-        "rangejoin",
-        "features",
-        "filtering",
-        "embedding_stats",
-        "skew",
-        "mix",
-        # module order only breaks ties WITHIN a priority class (the prio
-        # sort queues never-gated oracle queries first regardless); keep
-        # the total never-gated count <= 50 when adding queries so one
-        # driver window can prove them all
-        "sketches",
-        "quantiles",
-        "fuzzy",
-        "journeys",
-        "audio",
-        "olap",
-        "bitmaps",
-        "bloomjoin",
-        "dedup_incremental",
-        "adherence",
-        "simeval",
-        "weighted",
-        "stats",
-        "skyline",
-        "setsim",
-        "spans",
-        "attribution",
-        "basket",
-        "segments",
-        "bpe",
-        "ivf_incremental",
-        "image",
-        "perceptron",
-        "colbert",
-        "maxscore",
-        "linkage",
-        "zonemap",
-        "dsir",
-        "lm",
-        "drift",
-        "weaklabel",
-        "pairscore",
-        "corpusdiag",
-        "embgraph",
-        "video",
-        "preference",
-        "ann_verify",
-        "packing",
-    ):
-        try:
-            mods.append(__import__(f"kalytical_spark.operators.{name}", fromlist=[name]))
-        except ImportError as exc:
-            # never let one broken module take down the whole registry, but a
-            # silent drop would shrink the correctness gate unnoticed
-            print(
-                f"WARNING: operator module {name!r} failed to import and its "
-                f"queries are EXCLUDED from the registry: {exc}",
-                file=sys.stderr,
-            )
-    return mods
+# Registration order: the prio sort in all_queries is stable, so module
+# order breaks ties within a priority class.
+_MODULES = [
+    metadata, events, dag, runs, relational, text, dedup, similarity,
+    multimodal, replay, mutations, scheduling, simhash, subqueries, graph, asof,
+    curation, ranking, components, preprocess, scrub, quality, kmeans_ivf, pq,
+    timeseries, incremental, sampling, decision_support, warehouse, rangejoin,
+    features, filtering, embedding_stats, skew, mix,
+    # module order only breaks ties WITHIN a priority class (the prio
+    # sort queues never-gated oracle queries first regardless); keep
+    # the total never-gated count <= 50 when adding queries so one
+    # driver window can prove them all
+    sketches, quantiles, fuzzy, journeys, audio, olap, bitmaps, bloomjoin,
+    dedup_incremental, adherence, simeval, weighted, stats, skyline, setsim,
+    spans, attribution, basket, segments, bpe, ivf_incremental, image,
+    perceptron, colbert, maxscore, linkage, zonemap, dsir, lm, drift, weaklabel,
+    pairscore, corpusdiag, embgraph, video, preference, ann_verify, packing,
+]
 
 
 # The driver's correctness gate snapshots queries in registration order and
@@ -167,7 +104,7 @@ def _previously_gated() -> dict[str, int]:
 
 def all_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
     out: dict[str, tuple] = {}
-    for mod in _MODULES + _load_optional():
+    for mod in _MODULES:
         for name, (fn, oracle_body) in mod.QUERIES.items():
             if name in out:
                 raise ValueError(f"duplicate query name: {name}")

@@ -115,10 +115,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally provided session (the
     driver passes its own SparkSession to entry()/queries(); static confs like
     driver memory cannot change post-start, but these can)."""
-    try:
-        n_cores = str(spark.sparkContext.defaultParallelism)
-    except Exception:
-        n_cores = str(DEFAULT_CPUS)
+    n_cores = str(spark.sparkContext.defaultParallelism)
     for key, value in (
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.adaptive.enabled", "true"),
@@ -129,8 +126,5 @@ def tune_session(spark: SparkSession) -> SparkSession:
         # wrong in both directions at our scales; match the core count
         ("spark.sql.shuffle.partitions", n_cores),
     ):
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            pass  # conf locked by the driver; proceed with its values
+        spark.conf.set(key, value)
     return spark

@@ -1,13 +1,13 @@
 """Pure state-transition logic for the dependency-trigger state machine —
 the semantics of the reference dispatcher/incubation path
-(dispatcher.py:31-46, data_provider.py:204-230), written once and executed
-two ways:
+(dispatcher.py:31-46, data_provider.py:204-230), written once as `fold` and
+executed two ways:
 
-* batch replay: operators/replay.py folds a whole sorted delivery history
-  per pipeline through `apply_delivery` inside applyInPandas;
-* streaming: streaming/incubation.py applies the same function per
-  micro-batch inside applyInPandasWithState, with the accumulated trigger
-  map as the keyed state.
+* batch replay: operators/replay.py folds a pipeline's whole delivery
+  history from an empty trigger map inside applyInPandas;
+* streaming: streaming/incubation.py folds each micro-batch's deliveries
+  inside applyInPandasWithState, from the trigger map its keyed state
+  carried over from the previous batch.
 
 Both modes fold only multi-dependency 'all' pipelines. A delivery that
 always fires (`is_simple_delivery`, the column form of apply_delivery's
@@ -43,8 +43,24 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# One row per fire, the same columns in both execution modes (the batch
+# ledger adds its per-pipeline seq).
+OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("pipeline_uuid", T.StringType()),
+        T.StructField("fired_at", T.TimestampType()),
+        T.StructField("trigger_operator", T.StringType()),
+        T.StructField("n_deps", T.IntegerType()),
+        T.StructField("sources", T.StringType()),
+    ]
+)
+
+OUTPUT_COLUMNS = [f.name for f in OUTPUT_SCHEMA.fields]
 
 
 @dataclass
@@ -96,3 +112,36 @@ def apply_delivery(
 def sources_repr(sources: tuple[tuple[str, str], ...]) -> str:
     """Canonical string form of a source map (stable for comparisons)."""
     return ",".join(f"{u}={e}" for u, e in sources)
+
+
+def fold(
+    pipeline_uuid: str, deliveries: pd.DataFrame, seen: dict[str, str]
+) -> tuple[pd.DataFrame, dict[str, str]]:
+    """Fold one pipeline's deliveries (at least one row) through
+    apply_delivery in (event_time, exec_uuid) order, starting from the
+    trigger map `seen`; return the fires (OUTPUT_COLUMNS) and the trigger
+    map left over. trigger_operator and n_deps are the pipeline's own
+    (broadcast dimension columns), so the first row seeds the state.
+
+    The whole input is sorted at once: a stream group whose micro-batch
+    spans several Arrow chunks arrives in arbitrary chunk order, and
+    folding chunk by chunk would diverge from the batch replay."""
+    rows = deliveries.sort_values(["event_time", "exec_uuid"], kind="mergesort")
+    first = rows.iloc[0]
+    state = TriggerState(
+        operator=first["trigger_operator"], n_deps=int(first["n_deps"]), seen=dict(seen)
+    )
+    fires = []
+    for row in rows.itertuples(index=False):
+        fire = apply_delivery(state, row.upstream_uuid, row.exec_uuid, row.event_time)
+        if fire is not None:
+            fires.append(
+                (
+                    pipeline_uuid,
+                    fire.event_time,
+                    state.operator,
+                    state.n_deps,
+                    sources_repr(fire.sources),
+                )
+            )
+    return pd.DataFrame(fires, columns=OUTPUT_COLUMNS), state.seen

@@ -234,7 +234,6 @@ def test_engine_registry_and_submission():
 def test_sys_config_roundtrip():
     cfg = api.sys_config()
     assert set(cfg) == {
-        "incubating_job_age_out_s",
         "running_jobs_page_size",
         "history_lookback_s",
         "history_max_records",
@@ -245,13 +244,13 @@ def test_sys_config_roundtrip():
 
 def test_malformed_config_setting_raises(monkeypatch):
     """A setting that is not an integer is refused by name, never replaced
-    by its default (a mistyped TTL would silently become 20 days)."""
+    by its default (a mistyped page size would silently become 10)."""
     from kalytical_spark.config import load_config
 
-    monkeypatch.setenv("KALYTICAL_AGE_OUT_S", "3600")
-    assert load_config().incubating_job_age_out_s == 3600
-    monkeypatch.setenv("KALYTICAL_AGE_OUT_S", "abc")
-    with pytest.raises(ValueError, match=r"KALYTICAL_AGE_OUT_S='abc'"):
+    monkeypatch.setenv("KALYTICAL_RUNNING_PAGE", "25")
+    assert load_config().running_jobs_page_size == 25
+    monkeypatch.setenv("KALYTICAL_RUNNING_PAGE", "abc")
+    with pytest.raises(ValueError, match=r"KALYTICAL_RUNNING_PAGE='abc'"):
         load_config()
 
 

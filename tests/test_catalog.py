@@ -141,3 +141,37 @@ def test_sf_switch_evicts_three_tuple_memos(spark):
         kmeans_ivf._FIT_CACHE.pop((app, old, None), None)
         kmeans_ivf._FIT_CACHE.pop((app, new, None), None)
         kept.unpersist()
+
+
+def test_sf_switch_raises_when_a_memo_unpersist_fails(spark, monkeypatch):
+    """An operator memo that fails to unpersist on an sf switch raises out
+    of evict_other_sf_memos instead of being passed over."""
+    from kalytical_spark.operators import common
+
+    stale = spark.range(3)
+
+    def fail():
+        raise RuntimeError("unpersist failed")
+
+    monkeypatch.setattr(stale, "unpersist", fail)
+    memo = {(common.app_key(spark), "/nonexistent/old-sf", None): (stale, None)}
+    monkeypatch.setattr(common, "SESSION_MEMOS", [memo])
+    with pytest.raises(RuntimeError, match="unpersist failed"):
+        common.evict_other_sf_memos(spark, "/nonexistent/new-sf")
+
+
+def test_materialize_session_caches_raises_when_a_count_fails(spark, monkeypatch):
+    """A memoized frame that fails to materialize raises out of
+    materialize_session_caches instead of leaving a cold cache behind."""
+    from kalytical_spark.operators import common
+
+    broken = spark.range(3)
+
+    def fail():
+        raise RuntimeError("count failed")
+
+    monkeypatch.setattr(broken, "count", fail)
+    monkeypatch.setattr(catalog, "_CACHED_DFS", {})
+    monkeypatch.setattr(common, "SESSION_MEMOS", [{("app", "sf"): (broken, None)}])
+    with pytest.raises(RuntimeError, match="count failed"):
+        common.materialize_session_caches(spark)

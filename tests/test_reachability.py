@@ -3,15 +3,18 @@ point, so a side surface that only its own tests import cannot grow back.
 
 The walk is static (``ast``, no Spark session). It starts from the driver
 contract, the facade, the control loop's sink, the benchmark and the tools
-(their test_*.py modules excepted, as in the name-level pass), follows every
-import statement (lazy imports inside functions included) and
-the operator modules that ``registry._load_optional`` loads by name.
+(their test_*.py modules excepted, as in the name-level pass) and follows
+every import statement (lazy imports inside functions included).
 
 A second, name-level pass does the same for functions: every top-level def
 under kalytical_spark/ (the facade's endpoints aside) must be named by some
 non-test .py file in the repository outside its own body, so a helper
 nothing calls cannot linger either, and a def that only its own test calls
 cannot pass for a live one.
+
+A third pass does the same for settings: every field of the config object
+must be read by some non-test .py file other than config.py, so a setting
+that changes nothing a workload runs cannot be offered as a live one.
 """
 
 from __future__ import annotations
@@ -69,19 +72,6 @@ def _imported(path: str, module: str, is_pkg: bool) -> set[str]:
     return names
 
 
-def _string_loaded_operators() -> set[str]:
-    """The operator modules registry._load_optional imports by name."""
-    with open(os.path.join(_REPO, _PKG, "registry.py")) as fh:
-        tree = ast.parse(fh.read())
-    (fn,) = (
-        n for n in tree.body
-        if isinstance(n, ast.FunctionDef) and n.name == "_load_optional"
-    )
-    loops = [n for n in ast.walk(fn) if isinstance(n, ast.For)]
-    assert loops and isinstance(loops[0].iter, ast.Tuple)
-    return {f"{_PKG}.operators.{c.value}" for c in loops[0].iter.elts}
-
-
 def _reached() -> set[str]:
     mods = _package_modules()
     roots = [(m, mods[m]) for m in _ROOT_MODULES]
@@ -91,7 +81,7 @@ def _reached() -> set[str]:
             if f.endswith(".py") and not f.startswith("test_"):
                 roots.append((f"{d}.{f[:-3]}", os.path.join(_REPO, d, f)))
     seen: set[str] = set()
-    todo = [m for m, _ in roots if m in mods] + sorted(_string_loaded_operators())
+    todo = [m for m, _ in roots if m in mods]
     for m, path in roots:
         if m not in mods:
             todo.extend(_imported(path, m, is_pkg=False))
@@ -186,3 +176,27 @@ def test_every_package_def_is_named():
             used.update(names)
     unnamed = sorted(f"{rel}:{name}" for rel, name in defs if name not in used)
     assert not unnamed, f"top-level defs nothing names: {unnamed}"
+
+
+def test_every_config_field_is_read():
+    """A KalyticalSparkConfig field that no non-test .py file other than
+    config.py names is a dead setting: sys_config reports it (through
+    asdict, which names no field) but setting it changes nothing."""
+    config = os.path.join(_REPO, _PKG, "config.py")
+    with open(config) as fh:
+        tree = ast.parse(fh.read(), config)
+    (cls,) = (
+        n for n in tree.body
+        if isinstance(n, ast.ClassDef) and n.name == "KalyticalSparkConfig"
+    )
+    fields = [n.target.id for n in cls.body if isinstance(n, ast.AnnAssign)]
+    assert fields
+    used: set[str] = set()
+    for path in _non_test_py_files():
+        if path == config:
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        used.update(_names_used(tree, _docstrings(tree)))
+    unread = sorted(set(fields) - used)
+    assert not unread, f"config fields nothing reads: {unread}"

@@ -83,8 +83,6 @@ class FakeGroupState:
 
     def __init__(self):
         self._value = None
-        self.hasTimedOut = False
-        self.timeout_ms = None
 
     @property
     def exists(self):
@@ -102,9 +100,6 @@ class FakeGroupState:
     def remove(self):
         self._value = None
 
-    def setTimeoutDuration(self, ms):
-        self.timeout_ms = ms
-
 
 def _run_update(chunks, key="p-x"):
     state = FakeGroupState()
@@ -117,7 +112,8 @@ def _run_update(chunks, key="p-x"):
 def test_streaming_update_equals_batch_fold(spark):
     """Feeding the delivery history through the streaming update function in
     several micro-batches must yield the same fire ledger as the one-shot
-    batch fold (state carries the partial trigger map across batches)."""
+    streaming update and as the batch fold (state carries the partial
+    trigger map across batches)."""
     deliveries = (
         replay._deliveries(spark, SF_SMALL)
         .filter(F.col("trigger_operator") == "all")
@@ -135,17 +131,17 @@ def test_streaming_update_equals_batch_fold(spark):
         [group.iloc[: n // 3], group.iloc[n // 3 : 2 * n // 3], group.iloc[2 * n // 3 :]],
         key=some_uuid,
     )
-    assert len(one_shot) == len(chunked)
-    if len(one_shot):
-        pd.testing.assert_frame_equal(
-            one_shot.reset_index(drop=True), chunked.reset_index(drop=True)
-        )
+    batch = replay._fold_group(group)
+    assert len(batch) > 0
+    assert list(batch["seq"]) == list(range(1, len(batch) + 1))
+    pd.testing.assert_frame_equal(one_shot, chunked)
+    pd.testing.assert_frame_equal(chunked, batch.drop(columns="seq"))
 
 
 def test_simple_bucket_fires_every_delivery_without_state():
     """A simple bucket group spans several pipelines and Arrow chunks: each
     delivery fires once with its own pipeline_uuid and single source, and
-    the bucket never writes state, also with the age-out TTL bound."""
+    the bucket never writes state."""
     chunks = [
         pd.DataFrame(
             {
@@ -159,72 +155,18 @@ def test_simple_bucket_fires_every_delivery_without_state():
         )
         for pipes, execs in ((["p-a", "p-b"], ["e1", "e2"]), (["p-a"], ["e3"]))
     ]
-    key = (incubation.SIMPLE_BUCKET_PREFIX + "0",)
-    for ttl_ms in (None, 60_000):
-        state = FakeGroupState()
-        out = pd.concat(
-            incubation._update_group(key, iter(chunks), state, ttl_ms=ttl_ms),
-            ignore_index=True,
-        )
-        assert list(out.columns) == incubation.OUTPUT_COLUMNS
-        assert list(zip(out.pipeline_uuid, out.sources)) == [
-            ("p-a", "u1=e1"), ("p-b", "u1=e2"), ("p-a", "u1=e3")
-        ]
-        assert not state.exists and state.timeout_ms is None
-
-
-def _bound_update(spark, monkeypatch, ttl_ms):
-    """The update function and timeout conf fires_stream hands to
-    applyInPandasWithState (captured, not started)."""
-    from pyspark.sql.group import GroupedData
-
-    seen = {}
-
-    def capture(self, func, outputStructType, stateStructType, outputMode, timeoutConf):
-        seen.update(func=func, timeout=timeoutConf)
-
-    monkeypatch.setattr(GroupedData, "applyInPandasWithState", capture)
-    catalog.register(spark, SF_SMALL)
-    incubation.fires_stream(spark, spark.table("lifecycle_events"), SF_SMALL, ttl_ms=ttl_ms)
-    return seen["func"], seen["timeout"]
-
-
-def test_fires_stream_age_out_ttl(spark, monkeypatch):
-    """ST5 age-out through the fires_stream binding: a partial multi-dep
-    trigger map arms the configured incubating_job_age_out_s TTL, and a
-    timed-out group drops its state without firing. Without ttl_ms no
-    timeout is ever armed."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from kalytical_spark.config import load_config
-
-    ttl_ms = load_config().incubating_job_age_out_s * 1000
-    partial = pd.DataFrame(
-        {
-            "upstream_uuid": ["u1"],
-            "exec_uuid": ["e1"],
-            "event_time": [pd.Timestamp("2024-01-01")],
-            "trigger_operator": ["all"],
-            "n_deps": [2],
-        }
+    state = FakeGroupState()
+    out = pd.concat(
+        incubation._update_group(
+            (incubation.SIMPLE_BUCKET_PREFIX + "0",), iter(chunks), state
+        ),
+        ignore_index=True,
     )
-
-    update, timeout = _bound_update(spark, monkeypatch, ttl_ms)
-    assert timeout == GroupStateTimeout.ProcessingTimeTimeout
-    state = FakeGroupState()
-    assert list(update(("p-x",), iter([partial]), state)) == []
-    assert state.get == (["u1"], ["e1"])
-    assert state.timeout_ms == ttl_ms
-
-    state.hasTimedOut = True
-    assert list(update(("p-x",), iter([]), state)) == []
+    assert list(out.columns) == incubation.OUTPUT_COLUMNS
+    assert list(zip(out.pipeline_uuid, out.sources)) == [
+        ("p-a", "u1=e1"), ("p-b", "u1=e2"), ("p-a", "u1=e3")
+    ]
     assert not state.exists
-
-    update, timeout = _bound_update(spark, monkeypatch, None)
-    assert timeout == GroupStateTimeout.NoTimeout
-    state = FakeGroupState()
-    assert list(update(("p-x",), iter([partial]), state)) == []
-    assert state.exists and state.timeout_ms is None
 
 
 @pytest.mark.slow

@@ -1,6 +1,9 @@
-"""The session factory's machine-derived defaults."""
+"""The session factory's machine-derived defaults and the runtime confs
+tune_session sets."""
 
 from __future__ import annotations
+
+import pytest
 
 from kalytical_spark import session
 
@@ -23,3 +26,33 @@ def test_default_driver_memory_is_half_of_physical(monkeypatch):
 def test_default_driver_memory_is_capped(monkeypatch):
     _machine(monkeypatch, 256 * 1024)
     assert session.default_driver_memory() == f"{session.DRIVER_MEM_CAP_MB}m"
+
+
+def test_tune_session_raises_when_a_conf_is_refused(spark, monkeypatch):
+    """A conf the session refuses raises, naming its key, instead of
+    leaving the session silently untuned."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    set_conf = RuntimeConfig.set
+
+    def refuse_partitions(self, key, value):
+        if key == "spark.sql.shuffle.partitions":
+            raise RuntimeError(f"cannot modify {key}")
+        set_conf(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", refuse_partitions)
+    with pytest.raises(RuntimeError, match="spark.sql.shuffle.partitions"):
+        session.tune_session(spark)
+
+
+def test_tune_session_raises_without_a_core_count(spark, monkeypatch):
+    """A session whose parallelism cannot be read raises instead of
+    falling back to a core count that is not its own."""
+    from pyspark import SparkContext
+
+    def unreadable(self):
+        raise RuntimeError("no parallelism")
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(unreadable))
+    with pytest.raises(RuntimeError, match="no parallelism"):
+        session.tune_session(spark)
